@@ -18,7 +18,10 @@ Layout
                   upsert writer (K1/O6/O7).
 - ``queries``     The declared query inventory (SURVEY.md §2.3) with
                   DuckDB oracle SQL twins.
-- ``streaming``   Structured Streaming incremental flow.
+- ``streaming``   Structured Streaming twins: 15 entry points on shared
+                  plumbing (``_file_stream`` → ``foreachBatch`` sink,
+                  ``_drain_to_memory``); each supplies its transform,
+                  digest key and destination.
 """
 
 __version__ = "0.1.0"

@@ -203,7 +203,7 @@ def read_events(spark: SparkSession, path: str) -> DataFrame:
 # relations are cached per session).
 #
 # r17 key hardening (advice r16): the outer key is the SESSION OBJECT
-# (a WeakValueDictionary on id(session) — two sessions sharing an
+# (a WeakKeyDictionary keyed by the session — two sessions sharing an
 # applicationId via ``newSession()`` no longer share frames, and a
 # stopped session's frames drop with it), and the inner key carries a
 # cheap file-listing fingerprint (sorted name/mtime/size, one local

@@ -75,7 +75,8 @@ def _lit_vec(xs: list[float]) -> Column:
     the unparsable ``infD`` where the old ``F.lit`` path accepted it —
     guard loudly rather than fail inside the SQL parser. Current
     hyperplane families are integer-derived and always finite."""
-    assert all(math.isfinite(x) for x in xs), "non-finite hyperplane weight"
+    if not all(math.isfinite(x) for x in xs):
+        raise ValueError("non-finite hyperplane weight")
     return F.expr("array(" + ",".join(f"{x!r}D" for x in xs) + ")")
 
 

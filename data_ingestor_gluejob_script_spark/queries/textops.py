@@ -326,9 +326,10 @@ def simhash16_frame(
     # ``_h`` is a reserved internal name (advice r16): a carry column
     # so named would be clobbered by the projection below.
     reserved = {"_w", "_h"}
-    assert reserved.isdisjoint({id_col, *carry_cols}), (
-        "simhash16_frame: '_w'/'_h' are reserved internal names"
-    )
+    if not reserved.isdisjoint({id_col, *carry_cols}):
+        raise ValueError(
+            "simhash16_frame: '_w'/'_h' are reserved internal names"
+        )
     toks = docs.select(
         id_col,
         *carry_cols,
@@ -425,9 +426,10 @@ def simhash64_frame(
     # strings in ~0.1 s; both md5 chunk hashes are projected once.
     # Reserved internal names (advice r16): the projections below
     # would clobber an id column so named.
-    assert id_col not in ("_w", "_hlo", "_hhi"), (
-        "simhash64_frame: '_w'/'_hlo'/'_hhi' are reserved internal names"
-    )
+    if id_col in ("_w", "_hlo", "_hhi"):
+        raise ValueError(
+            "simhash64_frame: '_w'/'_hlo'/'_hhi' are reserved internal names"
+        )
     toks = docs.select(
         id_col,
         F.explode_outer(

@@ -1,26 +1,20 @@
 """Structured Streaming twins of the engine's batch surfaces.
 
-Two streams matter here:
+The reference's micro-batch loop (watermark → extract → upsert →
+advance, gluejob.py:616,136-139,623) runs here as real streams, all
+drained with ``availableNow`` triggers. The plumbing exists once:
 
-1. **Tumbling-window aggregation** — the streaming twin of
-   ``queries.analytics.q_tumbling_window``: ``readStream`` over the
-   events table → event-time watermark → ``window()`` aggregate. In
-   batch mode ``window('1 hour').start`` equals
-   ``date_trunc('hour', ts)``, so both twins agree row-for-row.
-2. **Incremental ingestion** — the reference's hand-rolled micro-batch
-   loop (watermark → extract → upsert → advance, SURVEY.md §2.2
-   "streaming" row) expressed as a real stream: ``readStream`` over a
-   source directory with ``foreachBatch`` driving the SAME
-   partition-scoped upsert writer the batch pipeline uses. Exactly-once
-   per micro-batch comes from the checkpoint + idempotent upsert, the
-   distributed analogue of the reference's at-least-once + dedup
-   protocol (gluejob.py:616,136-139,623).
-
-Scale notes: the window aggregate shuffles on (window, nothing else) —
-at 100 TB add a coarse key (e.g. tenant) to the groupBy to spread
-state; state store size is bounded by the watermark horizon, not the
-stream length. ``availableNow`` triggers give batch-sized catch-up runs
-with streaming semantics.
+- ``_file_stream`` / ``_start_foreach``: parquet (or CSV) directory →
+  ``foreachBatch(sink)`` with a checkpoint, so a restart resumes after
+  the last committed batch. Every ingest entry point (``run_*_ingest``,
+  ``stream_incremental_upsert``) supplies only its sink: the batch
+  transform, the content digest that makes a replay idempotent, and
+  the destination lake(s).
+- ``_drain_to_memory``: the events-table twins (tumbling/session
+  windows, attribution join, stateful totals, dedup) supply only their
+  operator and output mode, and read the memory sink back.
+- ``_ledgered_fresh`` / ``_ledgered_append``: the lake-as-state exact
+  dedup shared by the doc, URL, web-curation and near-dup ingests.
 """
 
 from __future__ import annotations
@@ -101,6 +95,54 @@ def read_events_stream(
     return stream
 
 
+def _drain_to_memory(df: DataFrame, query_name: str, mode: str) -> DataFrame:
+    """Run a streaming frame to completion (availableNow) into the
+    memory sink ``query_name`` in output ``mode``, and return the sink's
+    table."""
+    (
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return df.sparkSession.table(query_name)
+
+
+def _start_foreach(stream: DataFrame, sink, checkpoint_dir: str):
+    """Start ``stream`` into ``sink(batch_df, batch_id)`` under an
+    availableNow trigger. The checkpoint makes each micro-batch commit
+    once: a restart resumes after the last committed batch, and a crash
+    between the sink's write and the commit replays only that batch —
+    which every sink here makes idempotent. Returns the started
+    StreamingQuery (caller awaits/stops)."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _file_stream(
+    spark: SparkSession,
+    src_dir: str,
+    checkpoint_dir: str,
+    sink,
+    max_files_per_trigger: int,
+):
+    """The ingest skeleton: stream the parquet directory ``src_dir``
+    (schema probed by a batch read) at most ``max_files_per_trigger``
+    files per micro-batch into ``sink`` (see :func:`_start_foreach`)."""
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src_dir).schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src_dir)
+    )
+    return _start_foreach(stream, sink, checkpoint_dir)
+
+
 def tumbling_window_agg(
     events: DataFrame,
     window: str = "1 hour",
@@ -109,7 +151,14 @@ def tumbling_window_agg(
 ) -> DataFrame:
     """Watermarked tumbling (or, with ``slide``, hopping) window
     count/sum — works on a streaming OR batch DataFrame (same plan,
-    different sink rules)."""
+    different sink rules). In batch mode ``window('1 hour').start``
+    equals ``date_trunc('hour', ts)``, so it agrees row-for-row with
+    ``queries.analytics.q_tumbling_window``.
+
+    Scale: the aggregate shuffles on the window alone — at 100 TB add a
+    coarse key (e.g. tenant) to the groupBy to spread state; state
+    store size is bounded by the watermark horizon, not the stream
+    length."""
     src = events.withWatermark("ts", late) if events.isStreaming else events
     win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return src.groupBy(win.alias("w")).agg(
@@ -131,15 +180,7 @@ def run_tumbling_stream(
     output mode so windows still inside the watermark horizon are
     emitted too — making the result comparable to the batch twin."""
     agg = tumbling_window_agg(read_events_stream(spark, events_dir), slide=slide)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(agg, query_name, "complete")
 
 
 def session_window_agg(
@@ -171,15 +212,7 @@ def run_session_stream(
     """Drive the session-window twin to completion (availableNow,
     complete mode) into a memory sink."""
     agg = session_window_agg(read_events_stream(spark, events_dir))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(agg, query_name, "complete")
 
 
 ATTRIBUTION_WINDOW = "1 hour"
@@ -252,15 +285,7 @@ def run_attribution_stream(
         events.filter(F.col("event_type") == "purchase"),
         events.filter(F.col("event_type") == "click"),
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(out, query_name, "append")
 
 
 def stateful_user_totals(events: DataFrame) -> DataFrame:
@@ -327,19 +352,11 @@ def run_stateful_totals(
             spark, events_dir, max_files_per_trigger=max_files_per_trigger
         )
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy(
         F.col("n_events").desc(), F.col("sum_value").desc()
     )
     return (
-        spark.table(query_name)
+        _drain_to_memory(agg, query_name, "update")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -420,15 +437,7 @@ def run_dedup_stream(
     deduped = stream_exact_dedup(
         read_events_stream(spark, events_dir), keys=keys, late=late
     )
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return _drain_to_memory(deduped, query_name, "append")
 
 
 def stream_incremental_upsert(
@@ -460,12 +469,7 @@ def stream_incremental_upsert(
         write_partitioned_upsert(spark, batch_df, spec, lake_root, company)
         store.advance(spec.name, t0)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_foreach(stream, sink, checkpoint_dir)
 
 
 def _vocab_fc(spark: SparkSession, vocab_dir: str):
@@ -616,13 +620,6 @@ def run_vocab_ingest(
     """
     from .queries.corpusstats import vocab_frame
 
-    batch0 = spark.read.parquet(docs_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         lake = read_vocab_lake(spark, vocab_dir)
         if lake is not None:
@@ -699,11 +696,8 @@ def run_vocab_ingest(
                         st.getPath(), ex,
                     )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -732,13 +726,6 @@ def run_doc_dedup_ingest(
 
     Returns the started StreamingQuery (caller awaits/stops).
     """
-    batch0 = spark.read.parquet(docs_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # Null-safe digest via row_digest: md5(NULL) is NULL and every
         # equality join on it silently drops the row — a missing-text
@@ -752,29 +739,12 @@ def run_doc_dedup_ingest(
         # time; upgrade an existing lake with the one-time
         # migrate.backfill_doc_dedup_lake (file-scoped, crash-
         # resumable; rewrites text_md5 = row_digest(["text"])).
-        # The lake doubles as the dedup state here (no separate
-        # signature dir), so _ledgered_fresh's "state" read IS the
-        # lake — collapse, corruption-abort, and anti-join semantics
-        # are the shared contract (see its docstring).
-        fresh, _ = _ledgered_fresh(
-            spark, batch_df, lake_dir, "text_md5",
-            row_digest(["text"]), "doc_id",
+        _ledgered_append(
+            spark, batch_df, lake_dir, "text_md5", row_digest(["text"])
         )
-        # One file per broadcast-contract-bounded batch, then the
-        # shared incremental tail compaction (r16 — the near-dup
-        # twins' shape): the lake doubles as the per-batch digest
-        # ledger, so its file count is a per-batch scan cost. Crash
-        # ordering is safe: replay re-appends nothing (digest guard)
-        # and _ledgered_fresh recovers any interrupted swap before
-        # reading the lake.
-        fresh.coalesce(1).write.mode("append").parquet(lake_dir)
-        _maybe_compact_lakes(spark, lake_dir)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -808,13 +778,6 @@ def run_url_dedup_ingest(
     """
     from .queries.urlops import parse_urls_frame
 
-    batch0 = spark.read.parquet(docs_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         parsed = parse_urls_frame(batch_df, url_col)
         # NULL-id fallback inside the sentinel: md5(NULL) would give
@@ -830,19 +793,10 @@ def run_url_dedup_ingest(
                 F.coalesce(F.col("doc_id").cast("string"), F.lit("\x01")),
             ),
         )
-        fresh, _ = _ledgered_fresh(
-            spark, parsed, lake_dir, "url_md5", F.md5(key), "doc_id"
-        )
-        # same one-file-per-batch + incremental tail compaction as
-        # the doc twin (r16); idempotence + swap recovery identical
-        fresh.coalesce(1).write.mode("append").parquet(lake_dir)
-        _maybe_compact_lakes(spark, lake_dir)
+        _ledgered_append(spark, parsed, lake_dir, "url_md5", F.md5(key))
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -883,33 +837,18 @@ def run_web_curation_ingest(
     """
     from .queries.webpipeline import curate_page_maps
 
-    batch0 = spark.read.parquet(pages_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(pages_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         curated = curate_page_maps(
             batch_df,
             min_line_words=min_line_words,
             min_kept_lines=min_kept_lines,
         )
-        fresh, _ = _ledgered_fresh(
-            spark, curated, lake_dir, "text_md5",
-            row_digest(["text"]), "doc_id",
+        _ledgered_append(
+            spark, curated, lake_dir, "text_md5", row_digest(["text"])
         )
-        # same one-file-per-batch + incremental tail compaction as
-        # the doc twin (r16); idempotence + swap recovery identical
-        fresh.coalesce(1).write.mode("append").parquet(lake_dir)
-        _maybe_compact_lakes(spark, lake_dir)
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, pages_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -958,8 +897,6 @@ def _ledgered_fresh(
     None only when no signature lake exists yet; any OTHER read
     failure aborts the batch (treating e.g. a corrupt footer as
     "first batch" would skip dedup and double-ingest on replay)."""
-    from pyspark.errors import AnalysisException
-
     _assert_broadcast_contract(batch_df, "ledgered ingest")
     hashed = batch_df.withColumn(digest_col, digest_expr)
     payload = [
@@ -979,12 +916,7 @@ def _ledgered_fresh(
         .drop("_rn")
     )
     _recover_lake_swap(spark, sig_dir)
-    try:
-        state = spark.read.parquet(sig_dir)
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        state = None
+    state = _read_parquet_or_none(spark, sig_dir)
     if state is not None:
         # The ledger is the big side and grows every batch, and a
         # plain left_anti can only BUILD on it (Spark supports
@@ -1008,6 +940,28 @@ def _ledgered_fresh(
     return fresh, state
 
 
+def _ledgered_append(
+    spark: SparkSession,
+    rows: DataFrame,
+    lake_dir: str,
+    digest_col: str,
+    digest_expr,
+) -> None:
+    """Sink tail of the doc, URL and web-curation ingests, where the
+    lake doubles as its own digest ledger: :func:`_ledgered_fresh`
+    against ``lake_dir`` (id ``doc_id``), then one file per
+    broadcast-contract-bounded batch and the shared incremental tail
+    compaction — the lake's file count is a per-batch scan cost. Crash
+    ordering is safe: a replay re-appends nothing (digest guard) and
+    ``_ledgered_fresh`` recovers any interrupted swap before reading
+    the lake."""
+    fresh, _ = _ledgered_fresh(
+        spark, rows, lake_dir, digest_col, digest_expr, "doc_id"
+    )
+    fresh.coalesce(1).write.mode("append").parquet(lake_dir)
+    _maybe_compact_lakes(spark, lake_dir)
+
+
 #: Bucket fan-out of the band ledgers' prune column (``band_pfx``).
 #: Not a partition DIRECTORY — appends write one pfx-sorted file per
 #: batch and rebuilds write N_BAND_PFX pfx-clustered files, so the
@@ -1018,15 +972,30 @@ def _ledgered_fresh(
 N_BAND_PFX = 8
 
 
-def _read_parquet_or_none(spark: SparkSession, path: str):
-    """Parquet read that treats ONLY path-not-found as 'no lake yet'.
-    Any other failure (corrupt footer, permission) aborts the batch —
-    treating it as first-batch would skip dedup state and
-    double-ingest on replay."""
+def _band_pfx(key) -> Column:
+    """The ``band_pfx`` prune bucket of a 64-bit band key."""
+    return F.pmod(key, F.lit(N_BAND_PFX)).cast("int")
+
+
+def _touched_pfx(band_rows: DataFrame, key) -> list[int]:
+    """The ``band_pfx`` buckets a batch's band rows touch — metadata-
+    sized (≤ N_BAND_PFX values), pushed to the parquet row-group stats
+    of the pfx-sorted ledger files."""
+    return [r[0] for r in band_rows.select(_band_pfx(key)).distinct().collect()]
+
+
+def _read_parquet_or_none(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+):
+    """Parquet read (under ``schema`` when given) that treats ONLY
+    path-not-found as 'no lake yet'. Any other failure (corrupt
+    footer, permission) aborts the batch — treating it as first-batch
+    would skip dedup state and double-ingest on replay."""
     from pyspark.errors import AnalysisException
 
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     except AnalysisException as ex:
         if "PATH_NOT_FOUND" not in str(ex):
             raise
@@ -1131,7 +1100,7 @@ def _minhash_band_ledger_rows(sig_rows: DataFrame) -> DataFrame:
     return bands.select(
         key.alias("band_key"),
         _sig_cat_col(slot_cols).alias("sig_cat"),
-        F.pmod(key, F.lit(N_BAND_PFX)).cast("int").alias("band_pfx"),
+        _band_pfx(key).alias("band_pfx"),
     )
 
 
@@ -1157,9 +1126,7 @@ def _phash_band_ledger_rows(
         "band_idx",
         "band_val",
         "phash",
-        F.pmod(F.xxhash64("band_idx", "band_val"), F.lit(N_BAND_PFX))
-        .cast("int")
-        .alias("band_pfx"),
+        _band_pfx(F.xxhash64("band_idx", "band_val")).alias("band_pfx"),
     )
 
 
@@ -1186,18 +1153,6 @@ def _append_band_ledger(band_rows: DataFrame, band_dir: str) -> None:
 #: files, so probe-side open cost stays bounded at any batch count
 #: and crash-replay duplicate rows are deduplicated in passing.
 BAND_LEDGER_COMPACT_FILES = 96
-
-
-def _n_parquet_files(spark: SparkSession, path: str) -> int:
-    jvm, fs = _fs_of(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    if not fs.exists(p):
-        return 0
-    return sum(
-        1
-        for s in fs.listStatus(p)
-        if s.getPath().getName().endswith(".parquet")
-    )
 
 
 def _banding_tag_of(spark: SparkSession, band_dir: str) -> str | None:
@@ -1819,13 +1774,6 @@ def run_neardup_ingest(
         band_dir = sig_dir.rstrip("/") + "_bands"
     slot_cols = [f"s{i}" for i in range(N_MINHASH)]
 
-    batch0 = spark.read.parquet(docs_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         fresh, state = _ledgered_fresh(
             spark, batch_df, sig_dir, "text_md5",
@@ -1874,19 +1822,7 @@ def run_neardup_ingest(
                 spark, state, band_dir, _minhash_band_ledger_rows
             )
             if band_state is not None:
-                # prune column: the batch's touched band_pfx set is
-                # metadata-sized (≤ N_BAND_PFX values; pushed to
-                # parquet row-group stats of the pfx-sorted files)
-                pfx = [
-                    r[0]
-                    for r in new_keys.select(
-                        F.pmod(F.col("band_key"), F.lit(N_BAND_PFX))
-                        .cast("int")
-                        .alias("p")
-                    )
-                    .distinct()
-                    .collect()
-                ]
+                pfx = _touched_pfx(new_keys, F.col("band_key"))
                 # NULL typed as the batch's own id type: a bare
                 # string-NULL would make unionByName widen the batch
                 # branch's _r_doc_id to string and silently turn the
@@ -1942,13 +1878,9 @@ def run_neardup_ingest(
         finally:
             fresh.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, docs_dir, checkpoint_dir, sink, max_files_per_trigger
     )
-
 
 
 def run_image_dedup_ingest(
@@ -2018,13 +1950,6 @@ def run_image_dedup_ingest(
     if band_dir is None:
         band_dir = sig_dir.rstrip("/") + "_bands"
 
-    batch0 = spark.read.parquet(media_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(media_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # md5 of NULL is NULL — it would silently fall out of every
         # join — so NULL payloads digest to a SENTINEL distinct from
@@ -2087,19 +2012,9 @@ def run_image_dedup_ingest(
                 banding_tag=f"mh{max_hamming}",
             )
             if band_state is not None:
-                pfx = [
-                    r[0]
-                    for r in new_bands.select(
-                        F.pmod(
-                            F.xxhash64("band_idx", "band_val"),
-                            F.lit(N_BAND_PFX),
-                        )
-                        .cast("int")
-                        .alias("p")
-                    )
-                    .distinct()
-                    .collect()
-                ]
+                pfx = _touched_pfx(
+                    new_bands, F.xxhash64("band_idx", "band_val")
+                )
                 # NULL typed as the batch's own id type (see text twin)
                 id_type = fresh.schema[id_col].dataType
                 ref = ref.unionByName(
@@ -2147,11 +2062,8 @@ def run_image_dedup_ingest(
         finally:
             fresh.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, media_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -2205,15 +2117,8 @@ def _guarded_append(
     the new column set) when evolving the source schema. Within one
     stream run the schema is pinned at start, so crash-replay
     idempotence is unaffected."""
-    from pyspark.errors import AnalysisException
-
     expected = side_df.select(*src_cols, "_ingest_digest").schema
-    try:
-        dest = spark.read.schema(expected).parquet(out_dir)
-    except AnalysisException as ex:
-        if "PATH_NOT_FOUND" not in str(ex):
-            raise
-        dest = None
+    dest = _read_parquet_or_none(spark, out_dir, schema=expected)
     if dest is None:
         fresh = side_df
     else:
@@ -2282,15 +2187,7 @@ def run_audited_ingest(
 
     Returns the started StreamingQuery (caller awaits/stops).
     """
-    from .operators.diff import row_digest
     from .queries.audit import split_quarantine
-
-    batch0 = spark.read.parquet(src_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # Collapse in-batch duplicate ids FIRST (same row delivered in
@@ -2306,11 +2203,8 @@ def run_audited_ingest(
         finally:
             batch_df.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, src_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -2346,13 +2240,6 @@ def run_scored_ingest(
     """
     from .queries.classifier import classifier_score_frame
 
-    batch0 = spark.read.parquet(src_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         batch, src_cols = _collapse_batch(batch_df, id_col)
         # Persist the SCORED frame, not just the raw batch: both
@@ -2381,11 +2268,8 @@ def run_scored_ingest(
         finally:
             scored.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, src_dir, checkpoint_dir, sink, max_files_per_trigger
     )
 
 
@@ -2419,22 +2303,12 @@ def run_cdc_ingest(
     """
     from .pipeline import apply_cdc_batch
 
-    batch0 = spark.read.parquet(changes_dir)
-    stream = (
-        spark.readStream.schema(batch0.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(changes_dir)
-    )
-
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
             spark, batch_df, spec, lake_root, op_col=op_col,
             company=company,
         )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _file_stream(
+        spark, changes_dir, checkpoint_dir, sink, max_files_per_trigger
     )

@@ -223,6 +223,27 @@ def _py_simhash64(text):
     return fp - (1 << 64) if fp >= (1 << 63) else fp
 
 
+@pytest.mark.parametrize(
+    "fn, kwargs",
+    [
+        ("simhash16_frame", {"carry_cols": ("_h",)}),
+        ("simhash64_frame", {"id_col": "_hlo"}),
+    ],
+)
+def test_simhash_frame_rejects_reserved_names(spark, fn, kwargs):
+    """The reserved-internal-name guards raise ValueError (not
+    ``assert``, which ``python -O`` strips)."""
+    from data_ingestor_gluejob_script_spark.queries import textops
+
+    docs = spark.createDataFrame(
+        [(1, 2, "alpha beta")], "doc_id long, `_h` long, text string"
+    )
+    if "id_col" in kwargs:
+        docs = docs.withColumnRenamed("doc_id", kwargs["id_col"])
+    with pytest.raises(ValueError, match="reserved internal names"):
+        getattr(textops, fn)(docs, **kwargs)
+
+
 def test_simhash64_frame_matches_python_oracle(spark):
     from data_ingestor_gluejob_script_spark.queries.textops import (
         simhash64_frame,

@@ -266,10 +266,20 @@ def test_pass_shuffle_cleanup_mechanism(spark):
     )
 
     sc = spark.sparkContext
+    # block-manager dirs live under SPARK_LOCAL_DIRS when set (it
+    # overrides spark.local.dir), else under spark.local.dir
+    local_dirs = os.environ.get("SPARK_LOCAL_DIRS") or sc.getConf().get(
+        "spark.local.dir", "/tmp"
+    )
 
     def shuffle_bytes():
         total = 0
-        for d in glob.glob("/tmp/blockmgr-*"):
+        blockmgrs = [
+            d
+            for base in local_dirs.split(",")
+            for d in glob.glob(os.path.join(base, "blockmgr-*"))
+        ]
+        for d in blockmgrs:
             for root, _, files in os.walk(d):
                 for f in files:
                     if "shuffle" not in f:

@@ -26,10 +26,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 from data_ingestor_gluejob_script_spark import streaming  # noqa: E402
 from data_ingestor_gluejob_script_spark.streaming import (  # noqa: E402
     _compact_append_lake,
+    _data_file_statuses,
     _finish_scoped_swap,
     _lake_marker,
     _lake_staging,
-    _n_parquet_files,
     _recover_lake_swap,
     _write_swap_manifest,
     compact_append_lakes,
@@ -200,10 +200,10 @@ def test_compact_append_lake_preserves_rows_and_bounds_files(
     lake = str(tmp_path / "lake")
     for i in range(12):
         _append_one(spark, lake, [(i,)])
-    assert _n_parquet_files(spark, lake) == 12
+    assert len(_data_file_statuses(spark, lake)) == 12
     _compact_append_lake(spark, lake)
     assert _vals(spark, lake) == list(range(12))
-    assert _n_parquet_files(spark, lake) <= 2
+    assert len(_data_file_statuses(spark, lake)) <= 2
     assert not os.path.exists(_lake_marker(lake))
     assert not os.path.exists(_lake_staging(lake))
 
@@ -303,14 +303,14 @@ def test_out_of_band_seam_and_inline_disable(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LAKE_COMPACT_INLINE", "0")
     monkeypatch.setattr(streaming, "APPEND_LAKE_COMPACT_FILES", 2)
     streaming._maybe_compact_lakes(spark, lake)
-    assert _n_parquet_files(spark, lake) == 6
+    assert len(_data_file_statuses(spark, lake)) == 6
     # the out-of-band seam compacts (and records the event)
     n_events = len(streaming.COMPACTION_EVENTS)
     done = compact_append_lakes(spark, lake, threshold=2)
     assert len(done) == 1 and done[0]["small_files"] == 6
     assert len(streaming.COMPACTION_EVENTS) == n_events + 1
     assert _vals(spark, lake) == list(range(6))
-    assert _n_parquet_files(spark, lake) == 1
+    assert len(_data_file_statuses(spark, lake)) == 1
     # below threshold: no-op without force; force packs
     _append_one(spark, lake, [(6,)])
     assert compact_append_lakes(spark, lake, threshold=5) == []
@@ -348,8 +348,8 @@ def test_neardup_ingest_compacts_both_lakes_and_stays_exact(
     # bounded file counts: 16 appends with threshold 4 means both
     # lakes compacted at least twice and never exceed threshold+1
     # files for long (post-run: at most threshold + a few appends)
-    assert _n_parquet_files(spark, sigs) <= 6
-    assert _n_parquet_files(spark, lake) <= 6
+    assert len(_data_file_statuses(spark, sigs)) <= 6
+    assert len(_data_file_statuses(spark, lake)) <= 6
 
     df_all = spark.createDataFrame(rows, "doc_id long, text string")
     want = sorted(
@@ -395,7 +395,7 @@ def test_doc_and_url_dedup_ingests_compact_their_lakes(
     lake = str(tmp_path / "lake")
     q = run_doc_dedup_ingest(spark, docs_dir, lake, str(tmp_path / "ck"))
     q.awaitTermination(600)
-    assert _n_parquet_files(spark, lake) <= 6  # compacted mid-stream
+    assert len(_data_file_statuses(spark, lake)) <= 6  # compacted mid-stream
     got = sorted(
         r["doc_id"] for r in spark.read.parquet(lake).collect()
     )
@@ -419,7 +419,7 @@ def test_doc_and_url_dedup_ingests_compact_their_lakes(
     monkeypatch.setattr(streaming, "APPEND_LAKE_COMPACT_FILES", 3)
     uq = run_url_dedup_ingest(spark, url_dir, ulake, str(tmp_path / "uck"))
     uq.awaitTermination(600)
-    assert _n_parquet_files(spark, ulake) <= 5
+    assert len(_data_file_statuses(spark, ulake)) <= 5
     assert sorted(
         r["doc_id"] for r in spark.read.parquet(ulake).collect()
     ) == [0, 1, 2, 3]

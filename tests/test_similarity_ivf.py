@@ -14,6 +14,7 @@ import sys
 from pathlib import Path
 
 import duckdb
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -325,3 +326,13 @@ def test_neardup_sig_bits_sizing_and_extended_planes(spark):
             if float(vecs[i] @ w) >= 0:
                 want += 1 << j
         assert got[i] == want, i
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("nan")])
+def test_lit_vec_rejects_non_finite_weight(bad):
+    """``_lit_vec`` renders weights as SQL literals; a non-finite one
+    raises ValueError up front instead of failing in the SQL parser."""
+    from data_ingestor_gluejob_script_spark.queries.similarity import _lit_vec
+
+    with pytest.raises(ValueError, match="non-finite hyperplane weight"):
+        _lit_vec([0.5, bad])

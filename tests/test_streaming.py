@@ -239,6 +239,34 @@ def test_batch_dedup_contract(spark):
         streaming.stream_exact_dedup(no_ts, keys=["event_id"])
 
 
+def test_file_stream_one_file_per_batch_and_resumes(spark, tmp_path):
+    """The ingest skeleton's contract: with max_files_per_trigger=1,
+    three parquet files drain as three micro-batches (ids 0, 1, 2),
+    each file read once; a rerun on the same checkpoint has nothing
+    left to read and never calls the sink."""
+    import pandas as pd
+    import time as _time
+
+    src = tmp_path / "incoming"
+    src.mkdir()
+    for i in range(3):
+        pd.DataFrame({"x": [i]}).to_parquet(src / f"f{i}.parquet")
+        _time.sleep(0.05)
+    calls = []
+
+    def sink(batch_df, batch_id):
+        calls.append((batch_id, [r.x for r in batch_df.collect()]))
+
+    ckpt = str(tmp_path / "ckpt")
+    streaming._file_stream(spark, str(src), ckpt, sink, 1).awaitTermination()
+    assert [b for b, _ in calls] == [0, 1, 2]
+    assert sorted(x for _, xs in calls for x in xs) == [0, 1, 2]
+
+    calls.clear()
+    streaming._file_stream(spark, str(src), ckpt, sink, 1).awaitTermination()
+    assert calls == []
+
+
 def test_doc_dedup_ingest(spark, tmp_path):
     """Two arriving document files; the second is half duplicates of
     the first. The lake must end with exactly the distinct texts, the

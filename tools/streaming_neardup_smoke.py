@@ -108,9 +108,6 @@ def main() -> int:
         )
 
     from data_ingestor_gluejob_script_spark import streaming as _st
-    from data_ingestor_gluejob_script_spark.streaming import (
-        _n_parquet_files,
-    )
 
     sig = spark.read.parquet(sig_dir)
     doc = {
@@ -135,8 +132,8 @@ def main() -> int:
             }
             for ev in _st.COMPACTION_EVENTS
         ],
-        "sig_files_final": _n_parquet_files(spark, sig_dir),
-        "lake_files_final": _n_parquet_files(spark, lake_dir),
+        "sig_files_final": len(_st._data_file_statuses(spark, sig_dir)),
+        "lake_files_final": len(_st._data_file_statuses(spark, lake_dir)),
         "batches": batches,
         "batch_ms_first3": [b["batch_ms"] for b in batches[:3]],
         "batch_ms_last3": [b["batch_ms"] for b in batches[-3:]],
