@@ -6,7 +6,7 @@
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: check test test-full correctness bench
+.PHONY: check test test-full correctness bench trace-ingest
 
 check: test correctness
 
@@ -26,3 +26,13 @@ correctness:
 
 bench:
 	python bench.py
+
+# One traced ingest run (seed 1); prints the checks' outcome and the
+# writer's per-layer metrics (jobs, bytes and files written, write
+# amplification, ...).
+trace-ingest:
+	python3 perfbench/run.py --workload ingest --seed 1 --seconds 25 --trace 1 \
+	| tail -n 1 | python3 -c 'import json, sys; r = json.load(sys.stdin); \
+	print("failed", r["failed"], "of", r["attempted"]); \
+	[print(k, v["value"]) for k, v in sorted(r["metrics"].items()) \
+	 if k.startswith(("pipeline.upsert.", "pipeline.write_amp"))]'

@@ -29,13 +29,23 @@ Spark-first re-expression:
 Scale notes (100 TB): the only shuffles are the upsert window on the
 id column and the write's partition split; both are keyed, AQE-sized,
 and skew-split. The touched-partition set is the one driver-side
-collect — a list of (year, month) pairs, bounded by the calendar, not
-the data.
+result — a list of (year, month) pairs, bounded by the calendar, not
+the data. Both lake writers get it, with the batch's row count (the
+empty-batch skip) and NULL-id count (the PK guard), from ONE
+evaluation of the batch (``_evaluated_batch``): a ``noop`` write
+carrying an Observation.
+
+- daily increments (``broadcast_batch=True``): that write also fills
+  a persisted copy of the batch, and the merge reads the cache, so the
+  source runs ONCE per table;
+- initial loads and backfills (``broadcast_batch=False``): nothing is
+  pinned, and the merge evaluates the source again — TWICE per table.
 """
 
 from __future__ import annotations
 
 import logging
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from functools import reduce
@@ -79,43 +89,70 @@ def _partition_predicate(ycol: str, mcol: str, touched: list[tuple]):
     )
 
 
-def _touched_partitions_guarded(
-    prepared: DataFrame,
+@contextmanager
+def _evaluated_batch(
+    batch: DataFrame,
     spec: TableSpec,
-    ycol: str,
-    mcol: str,
-    delete_touched: list[tuple] | None,
-) -> tuple[list[tuple], list[tuple]]:
-    """One metadata-sized pass over the prepared batch that yields the
-    (year, month) partitions it touches AND enforces the writer's PK
-    contract (no NULL ``spec.id_col``) in the same aggregation — the
-    null-id guard that makes ``merge_upsert(keys_nullable=False)``
-    sound costs no extra batch scan beyond the touched-partition
-    collect the writer already paid. Returns ``(touched,
-    batch_touched)`` where ``touched`` additionally covers the CDC
-    delete arm's victim partitions."""
-    part_rows = (
-        prepared.groupBy(ycol, mcol)
-        .agg(
-            F.count_if(F.col(spec.id_col).isNull()).alias("_null_ids")
+    broadcast_batch: bool,
+    delete_touched: list[tuple] | None = None,
+):
+    """Evaluate the prepared batch once, with one ``noop`` write
+    carrying an Observation, for everything both lake writers must
+    know before the merge: its row count (the empty-batch skip), its
+    NULL-id count (the PK guard) and the (year, month) partitions it
+    touches. Yields ``(prepared, touched, batch_touched, n_rows)``,
+    where ``touched`` additionally covers the CDC delete arm's victim
+    partitions. With ``broadcast_batch`` the batch is persisted, and
+    the cache is released on every exit — guard raise, empty return,
+    failed write — because the streaming sink calls the writer once
+    per micro-batch.
+
+    The PK guard matters because both writers run the merge's anti
+    join with plain-equality keys (``keys_nullable=False``), which is
+    only sound because no row with a NULL id ever enters the lake —
+    enforced HERE, on every write including the initial load, so the
+    invariant holds for the lake's whole life.
+    """
+    ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
+    prepared = _prepare_batch(batch, spec)
+    if broadcast_batch:
+        prepared = prepared.persist()
+    try:
+        obs = Observation(f"batch_{spec.name}")
+        (
+            # Only the three observed columns: unpinned, the source
+            # prunes the rest; persisted, the scan still fills the
+            # whole cache.
+            prepared.select(spec.id_col, ycol, mcol)
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.count_if(F.col(spec.id_col).isNull()).alias("null_ids"),
+                F.collect_set(F.struct(ycol, mcol)).alias("parts"),
+            )
+            .write.format("noop")
+            .mode("overwrite")
+            .save()
         )
-        .collect()
-    )
-    null_ids = sum(r["_null_ids"] for r in part_rows)
-    if null_ids:
-        raise ValueError(
-            f"write_partitioned_upsert: {null_ids} row(s) with NULL "
-            f"{spec.id_col} in the {spec.name} batch — the lake merge "
-            "treats the id as a primary key (plain-equality anti "
-            "join); a NULL id can never be upserted over and would "
-            "strand forever. Fix the extraction or pre-filter."
-        )
-    batch_touched = [(r[0], r[1]) for r in part_rows]
-    touched = list(batch_touched)
-    for part in delete_touched or []:
-        if part not in touched:
-            touched.append(part)
-    return touched, batch_touched
+        stats = obs.get
+        n_rows, null_ids = stats["n"], stats["null_ids"]
+        batch_touched = [(p[0], p[1]) for p in stats["parts"]]
+        if null_ids:
+            raise ValueError(
+                f"write_partitioned_upsert: {null_ids} row(s) with NULL "
+                f"{spec.id_col} in the {spec.name} batch — the lake merge "
+                "treats the id as a primary key (plain-equality anti "
+                "join); a NULL id can never be upserted over and would "
+                "strand forever. Fix the extraction or pre-filter."
+            )
+        touched = list(batch_touched)
+        for part in delete_touched or []:
+            if part not in touched:
+                touched.append(part)
+        yield prepared, touched, batch_touched, int(n_rows)
+    finally:
+        if broadcast_batch:
+            prepared.unpersist()
 
 
 def _prepare_batch(batch: DataFrame, spec: TableSpec) -> DataFrame:
@@ -231,6 +268,14 @@ def write_partitioned_upsert(
     cross-partition copies either; this writer now matches it
     exactly.
 
+    Batch evaluation: the empty-batch skip, the NULL-id guard and the
+    touched (year, month) set come from one pass over the batch
+    (``_evaluated_batch``): a ``noop`` write carrying an Observation.
+    With ``broadcast_batch`` the batch is persisted, that write fills
+    the cache and the merge reads it, so the source is evaluated once
+    (the cache is released on every exit); without it nothing is
+    pinned and the merge evaluates the source a second time.
+
     Returns the number of rows written (0 = empty batch skipped, the
     F2 guard at gluejob.py:175-179). Mirrors posting_parquets_in_s3 +
     s3_parquet_file_put_and_update (gluejob.py:173-205) as one
@@ -255,124 +300,128 @@ def write_partitioned_upsert(
     parallelism cap), so leave it off at scale and run the default
     multi-file layout + ``compact_partitions`` instead.
     """
-    if batch.limit(1).count() == 0:
-        if delete_keys is not None:
-            raise ValueError(
-                "write_partitioned_upsert: delete_keys requires a "
-                "non-empty batch — use forget_rows for pure erasure"
+    with _evaluated_batch(batch, spec, broadcast_batch, delete_touched) as (
+        prepared,
+        touched,
+        batch_touched,
+        n_rows,
+    ):
+        if n_rows == 0:
+            if delete_keys is not None:
+                raise ValueError(
+                    "write_partitioned_upsert: delete_keys requires a "
+                    "non-empty batch — use forget_rows for pure erasure"
+                )
+            log.info("skip empty batch for %s", spec.name)
+            return 0
+
+        ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
+        root = lake_table_root(lake_root, spec.name)
+        existing = read_parquet_table(spark, root)
+        # ``touched`` (the batch's partitions plus the delete arm's)
+        # drives both the lake pruning predicate and the compat rename
+        # scope.
+        if existing is not None:
+            existing = _scope_existing(
+                existing, prepared, spec, ycol, mcol, touched, company
             )
-        log.info("skip empty batch for %s", spec.name)
-        return 0
 
-    ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
-    prepared = _prepare_batch(batch, spec)
+        emptied: list[tuple] = []
+        if delete_keys is not None and existing is not None:
+            if single_object_compat:
+                raise ValueError(
+                    "write_partitioned_upsert: delete_keys is not "
+                    "supported with single_object_compat (the rename "
+                    "scope and emptied-dir removal would conflict)"
+                )
+            key = delete_keys.select(
+                F.col(delete_keys.columns[0]).alias(spec.id_col)
+            ).distinct()
+            existing = existing.join(
+                F.broadcast(key), spec.id_col, "left_anti"
+            )
+            # Which delete-arm partitions still hold rows after the
+            # fused merge — resolved BEFORE the overwrite (the write
+            # mutates the path this plan reads). A partition receiving
+            # batch rows can never empty; only delete_touched -
+            # batch_touched can.
+            at_risk = [
+                p for p in (delete_touched or []) if p not in batch_touched
+            ]
+            if at_risk:
+                risk_pred = _partition_predicate(ycol, mcol, at_risk)
+                kept = {
+                    (r[0], r[1])
+                    for r in existing.filter(risk_pred)
+                    .select(ycol, mcol)
+                    .distinct()
+                    .collect()
+                }
+                emptied = [p for p in at_risk if p not in kept]
 
-    root = lake_table_root(lake_root, spec.name)
-    existing = read_parquet_table(spark, root)
-    # The (year, month) set this batch touches — drives both the lake
-    # pruning predicate and the compat rename scope. The collect is
-    # metadata-sized (bounded by the calendar, not the data). The same
-    # pass enforces the PK contract: this writer's merge runs the anti
-    # join with plain-equality keys (``keys_nullable=False`` below),
-    # which is only sound because no row with a NULL id ever enters
-    # the lake — guarded HERE, on every write including the initial
-    # load, so the invariant holds for the lake's whole life.
-    touched, batch_touched = _touched_partitions_guarded(
-        prepared, spec, ycol, mcol, delete_touched
-    )
-    if existing is not None:
-        existing = _scope_existing(
-            existing, prepared, spec, ycol, mcol, touched, company
+        if existing is None:
+            merged = upsert_dedup(prepared, None, spec.id_col)  # O6+O7
+        else:
+            merged = merge_upsert(  # O6+O7, join-formulated (r13)
+                prepared,
+                existing,
+                spec.id_col,
+                existing_unique=True,
+                broadcast_incoming=broadcast_batch,
+                # PK contract: ids are guarded non-null on every write
+                # (see _evaluated_batch), so the anti join may use plain
+                # equality. The null-safe form would partition on
+                # (coalesce(id), isnull(id)) — a shape no id-bucketed
+                # lake can satisfy, silently re-introducing the
+                # lake-side Exchange on the sort-merge/backfill arm (the
+                # trap pinned in operators/upsert.py and
+                # tests/test_merge_upsert.py).
+                keys_nullable=False,
+            )
+        # Row count via an Observation on the write itself: a separate
+        # .count() would execute the full merge plan (the incoming-side
+        # window dedup + broadcast/sort-merge anti join against the
+        # pruned lake scan + union) a second time just for the number.
+        obs = Observation(f"upsert_{spec.name}")
+        out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
+            "company", F.lit(company)
         )
-
-    emptied: list[tuple] = []
-    if delete_keys is not None and existing is not None:
         if single_object_compat:
-            raise ValueError(
-                "write_partitioned_upsert: delete_keys is not "
-                "supported with single_object_compat (the rename "
-                "scope and emptied-dir removal would conflict)"
+            # Hash-partition on the partition columns so each (company,
+            # year, month) combination lands in exactly one task →
+            # exactly one file per partition directory, renamed below.
+            out = out.repartition("company", ycol, mcol)
+        writer = out.write
+        if max_records_per_file and not single_object_compat:
+            # The reference writes ONE object per partition (gluejob.py:
+            # 187,201-203) — a single-task bottleneck at 100 TB. We keep
+            # the directory contract and bound file size instead: Spark
+            # rolls to a new file within the partition every N records.
+            writer = writer.option(
+                "maxRecordsPerFile", str(max_records_per_file)
             )
-        key = delete_keys.select(
-            F.col(delete_keys.columns[0]).alias(spec.id_col)
-        ).distinct()
-        existing = existing.join(F.broadcast(key), spec.id_col, "left_anti")
-        # Which delete-arm partitions still hold rows after the fused
-        # merge — resolved BEFORE the overwrite (the write mutates the
-        # path this plan reads). A partition receiving batch rows can
-        # never empty; only delete_touched - batch_touched can.
-        at_risk = [
-            p for p in (delete_touched or []) if p not in batch_touched
-        ]
-        if at_risk:
-            risk_pred = _partition_predicate(ycol, mcol, at_risk)
-            kept = {
-                (r[0], r[1])
-                for r in existing.filter(risk_pred)
-                .select(ycol, mcol)
-                .distinct()
-                .collect()
-            }
-            emptied = [p for p in at_risk if p not in kept]
-
-    if existing is None:
-        merged = upsert_dedup(prepared, None, spec.id_col)  # O6+O7
-    else:
-        merged = merge_upsert(  # O6+O7, join-formulated (r13)
-            prepared,
-            existing,
-            spec.id_col,
-            existing_unique=True,
-            broadcast_incoming=broadcast_batch,
-            # PK contract: ids are guarded non-null on every write
-            # (see _touched_partitions_guarded), so the anti join may
-            # use plain equality. The null-safe form would partition
-            # on (coalesce(id), isnull(id)) — a shape no id-bucketed
-            # lake can satisfy, silently re-introducing the lake-side
-            # Exchange on the sort-merge/backfill arm (the trap pinned
-            # in operators/upsert.py and tests/test_merge_upsert.py).
-            keys_nullable=False,
+        (
+            # Per-writer dynamic overwrite: only partitions present in
+            # `merged` are replaced. Set on the writer (not the session)
+            # so the contract holds for caller-supplied vanilla sessions
+            # too — a session-level default of "static" would otherwise
+            # wipe the whole table root and the touched-scoped rename
+            # below would miss partitions that silently lost their
+            # files.
+            writer.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("company", ycol, mcol)
+            .parquet(root)
         )
-    # Row count via an Observation on the write itself: a separate
-    # .count() would execute the full merge plan (the incoming-side
-    # window dedup + broadcast/sort-merge anti join against the pruned
-    # lake scan + union — and re-extract a JDBC source) a second time
-    # just for the number.
-    obs = Observation(f"upsert_{spec.name}")
-    out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
-        "company", F.lit(company)
-    )
-    if single_object_compat:
-        # Hash-partition on the partition columns so each (company,
-        # year, month) combination lands in exactly one task → exactly
-        # one file per partition directory, renamed below.
-        out = out.repartition("company", ycol, mcol)
-    writer = out.write
-    if max_records_per_file and not single_object_compat:
-        # The reference writes ONE object per partition (gluejob.py:
-        # 187,201-203) — a single-task bottleneck at 100 TB. We keep
-        # the directory contract and bound file size instead: Spark
-        # rolls to a new file within the partition every N records.
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    (
-        # Per-writer dynamic overwrite: only partitions present in
-        # `merged` are replaced. Set on the writer (not the session) so
-        # the contract holds for caller-supplied vanilla sessions too —
-        # a session-level default of "static" would otherwise wipe the
-        # whole table root and the touched-scoped rename below would
-        # miss partitions that silently lost their files.
-        writer.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("company", ycol, mcol)
-        .parquet(root)
-    )
-    n = int(obs.get["n"])
-    if single_object_compat:
-        _rename_to_single_objects(spark, root, spec.name, company, touched)
-    if emptied:
-        _remove_partition_dirs(spark, root, spec.name, company, emptied)
-    log.info("upserted %d rows into %s", n, root)
-    return n
+        n = int(obs.get["n"])
+        if single_object_compat:
+            _rename_to_single_objects(
+                spark, root, spec.name, company, touched
+            )
+        if emptied:
+            _remove_partition_dirs(spark, root, spec.name, company, emptied)
+        log.info("upserted %d rows into %s", n, root)
+        return n
 
 
 def _remove_partition_dirs(
@@ -691,76 +740,75 @@ def write_partitioned_upsert_bucketed(
 
     Returns rows written (0 = empty batch skipped, the F2 guard).
     """
-    if batch.limit(1).count() == 0:
-        log.info("skip empty batch for %s", spec.name)
-        return 0
-
-    ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
-    prepared = _prepare_batch(batch, spec)
-    # Same pass = same PK contract as the hive-path writer: the
-    # plain-equality anti join below is only sound because NULL ids
-    # are rejected on every write, initial load included.
-    touched, _ = _touched_partitions_guarded(
-        prepared, spec, ycol, mcol, None
-    )
-
-    obs = Observation(f"upsert_bucketed_{spec.name}")
-    if not spark.catalog.tableExists(table_name):
-        out = (
-            prepared.observe(obs, F.count(F.lit(1)).alias("n"))
-            .withColumn("company", F.lit(company))
-            .select(*spec.columns, "company", ycol, mcol)
-        )
-        (
-            out.write.format("parquet")
-            .partitionBy("company", ycol, mcol)
-            .bucketBy(num_buckets, spec.id_col)
-            .sortBy(spec.id_col)
-            .saveAsTable(table_name)
-        )
-        n = int(obs.get["n"])
-        log.info("created bucketed lake %s with %d rows", table_name, n)
-        return n
-
-    lake = spark.table(table_name)
-    existing = _scope_existing(
-        lake, prepared, spec, ycol, mcol, touched, company
-    )
-    if not broadcast_batch:
-        # Conform the incoming side to the lake's bucket layout BEFORE
-        # the merge: the incoming dedup window would otherwise shuffle
-        # at AQE's initial width, and when the sort-merge join then
-        # aligns partition COUNTS it re-shuffles the 4-vs-256 smaller
-        # child — the bucketed lake — forfeiting the Exchange-free scan
-        # this layout exists for (observed: the planner's
-        # autoBucketedScan then disables bucketed reading entirely).
-        # One explicit hash(id, num_buckets) shuffle of the batch makes
-        # the window AND the join reuse it: the lake side never moves.
-        # AQE does not coalesce user-specified repartitions, so the
-        # alignment holds regardless of batch size.
-        prepared = prepared.repartition(num_buckets, spec.id_col)
-    merged = merge_upsert(
+    with _evaluated_batch(batch, spec, broadcast_batch) as (
         prepared,
-        existing,
-        spec.id_col,
-        existing_unique=True,  # this writer's own uniqueness invariant
-        broadcast_incoming=broadcast_batch,
-        keys_nullable=False,  # PK contract, guarded above — keeps the
-        # bucketed lake scan Exchange-free under the sort-merge arm
-    )
-    staging = f"{_table_location(spark, table_name)}/_staging"
-    out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
-        "company", F.lit(company)
-    )
-    try:
-        out.select(*lake.columns).write.mode("overwrite").parquet(staging)
-        n = int(obs.get["n"])
-        staged = spark.read.parquet(staging).select(*lake.columns)
-        _insert_partition_overwrite(spark, staged, table_name, dynamic=True)
-    finally:
-        _rm_dir(spark, staging)
-    log.info("upserted %d rows into bucketed lake %s", n, table_name)
-    return n
+        touched,
+        _,
+        n_rows,
+    ):
+        if n_rows == 0:
+            log.info("skip empty batch for %s", spec.name)
+            return 0
+
+        ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
+        if not spark.catalog.tableExists(table_name):
+            (
+                prepared.withColumn("company", F.lit(company))
+                .select(*spec.columns, "company", ycol, mcol)
+                .write.format("parquet")
+                .partitionBy("company", ycol, mcol)
+                .bucketBy(num_buckets, spec.id_col)
+                .sortBy(spec.id_col)
+                .saveAsTable(table_name)
+            )
+            log.info(
+                "created bucketed lake %s with %d rows", table_name, n_rows
+            )
+            return n_rows
+
+        lake = spark.table(table_name)
+        existing = _scope_existing(
+            lake, prepared, spec, ycol, mcol, touched, company
+        )
+        if not broadcast_batch:
+            # Conform the incoming side to the lake's bucket layout
+            # BEFORE the merge: the incoming dedup window would
+            # otherwise shuffle at AQE's initial width, and when the
+            # sort-merge join then aligns partition COUNTS it
+            # re-shuffles the 4-vs-256 smaller child — the bucketed
+            # lake — forfeiting the Exchange-free scan this layout
+            # exists for (observed: the planner's autoBucketedScan then
+            # disables bucketed reading entirely). One explicit
+            # hash(id, num_buckets) shuffle of the batch makes the
+            # window AND the join reuse it: the lake side never moves.
+            # AQE does not coalesce user-specified repartitions, so the
+            # alignment holds regardless of batch size.
+            prepared = prepared.repartition(num_buckets, spec.id_col)
+        merged = merge_upsert(
+            prepared,
+            existing,
+            spec.id_col,
+            existing_unique=True,  # this writer's own uniqueness invariant
+            broadcast_incoming=broadcast_batch,
+            keys_nullable=False,  # PK contract, guarded above — keeps
+            # the bucketed lake scan Exchange-free under the sort-merge arm
+        )
+        staging = f"{_table_location(spark, table_name)}/_staging"
+        obs = Observation(f"upsert_bucketed_{spec.name}")
+        out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
+            "company", F.lit(company)
+        )
+        try:
+            out.select(*lake.columns).write.mode("overwrite").parquet(staging)
+            n = int(obs.get["n"])
+            staged = spark.read.parquet(staging).select(*lake.columns)
+            _insert_partition_overwrite(
+                spark, staged, table_name, dynamic=True
+            )
+        finally:
+            _rm_dir(spark, staging)
+        log.info("upserted %d rows into bucketed lake %s", n, table_name)
+        return n
 
 
 def compact_bucketed_table(
@@ -1153,27 +1201,35 @@ def forget_rows(
 
     pred = _partition_predicate(ycol, mcol, touched)
     scoped = lake.filter(pred)
-    survivors = scoped.join(F.broadcast(key), spec.id_col, "left_anti")
-    n_before = scoped.count()
-    # Which touched partitions still have rows AFTER the erasure —
-    # resolved BEFORE the overwrite (the write mutates the path the
-    # plan reads). Fully-erased partitions emit no output rows, so
-    # dynamic overwrite leaves their old files in place; they're
-    # removed explicitly below.
-    kept = {
-        (r[0], r[1])
-        for r in survivors.select(ycol, mcol).distinct().collect()
-    }
+    # One left join of the scoped lake to the flagged (distinct) keys
+    # serves both the survivors and, from ONE grouped pass, the rows
+    # erased and the touched partitions that still hold rows AFTER the
+    # erasure — resolved BEFORE the overwrite (the write mutates the
+    # path the plan reads). Fully-erased partitions emit no output
+    # rows, so dynamic overwrite leaves their old files in place;
+    # they're removed explicitly below.
+    flagged = scoped.join(
+        F.broadcast(key.withColumn("_hit", F.lit(True))), spec.id_col, "left"
+    )
+    per_part = (
+        flagged.groupBy(ycol, mcol)
+        .agg(
+            F.count_if(F.col("_hit")).alias("erased"),
+            F.count_if(F.col("_hit").isNull()).alias("kept"),
+        )
+        .collect()
+    )
+    n = sum(r["erased"] for r in per_part)
+    kept = {(r[0], r[1]) for r in per_part if r["kept"]}
 
-    obs = Observation(f"forget_{spec.name}")
     (
-        survivors.observe(obs, F.count(F.lit(1)).alias("n"))
+        flagged.filter(F.col("_hit").isNull())
+        .drop("_hit")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("company", ycol, mcol)
         .parquet(root)
     )
-    n_after = int(obs.get["n"])
     _remove_partition_dirs(
         spark,
         root,
@@ -1181,7 +1237,6 @@ def forget_rows(
         company,
         [p for p in touched if p not in kept],
     )
-    n = n_before - n_after
     log.info("forgot %d rows from %s across %d partitions",
              n, root, len(touched))
     return n
@@ -1273,7 +1328,10 @@ def apply_cdc_batch(
         ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
         # count the CHANGE rows applied, not the writer's merged-rows
         # return (which includes surviving lake rows of touched
-        # partitions); cheap — the batch is persisted above
+        # partitions), and count BEFORE the write to route a
+        # pure-erasure batch; cheap — one batch-sized window over the
+        # batch persisted above (which the delete arm still reads
+        # while the writer caches its own prepared upserts)
         n_up = upserts.count()
         if n_up == 0:
             # pure-erasure batch: the fused write needs batch rows to

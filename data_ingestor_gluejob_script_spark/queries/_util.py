@@ -219,7 +219,13 @@ _LOAD_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
 def _listing_fingerprint(path: str) -> tuple:
     """(name, mtime_ns, size) per entry of ``path`` (or of the file
     itself), sorted — the memo-key component that detects an in-process
-    rewrite of a memoized table."""
+    rewrite of a memoized table.
+
+    Not recursive: only the top-level entries are stat'ed. A Spark
+    overwrite deletes and recreates its files, which this detects; an
+    in-place change to a file inside a nested (partition)
+    subdirectory that leaves the subdirectory's own mtime unchanged
+    is NOT detected, and the memo would serve the stale plan."""
     try:
         st = os.stat(path)
         if not os.path.isdir(path):
@@ -234,6 +240,17 @@ def _listing_fingerprint(path: str) -> tuple:
     except OSError:
         # Unreadable/absent path: let the reader raise its own error.
         return ("<unlistable>",)
+
+
+def _memo_put(memo: dict, key: tuple, value):
+    """Insert ``key`` = ``(kind, path, fingerprint)`` after dropping
+    every earlier entry for the same ``(kind, path)``: a rewritten path
+    supersedes its old fingerprint, so a long-lived session holds one
+    entry per path instead of one per rewrite."""
+    for stale in [k for k in memo if k[:2] == key[:2]]:
+        del memo[stale]
+    memo[key] = value
+    return value
 
 
 def _session_memo(spark: SparkSession) -> dict:
@@ -265,8 +282,7 @@ def table_rowcount(spark: SparkSession, sf_dir: str, table: str) -> int:
     key = ("count", path, _listing_fingerprint(path))
     n = memo.get(key)
     if n is None:
-        n = load(spark, sf_dir, table).count()
-        memo[key] = n
+        n = _memo_put(memo, key, load(spark, sf_dir, table).count())
     return n
 
 
@@ -283,5 +299,5 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             df = read_events(spark, path)
         else:
             df = spark.read.parquet(path)
-        memo[key] = df
+        _memo_put(memo, key, df)
     return df

@@ -152,6 +152,29 @@ def test_load_memo_detects_in_process_rewrite(spark, tmp_path):
     assert b.count() == 9
 
 
+def test_load_memo_keeps_one_entry_per_rewritten_path(spark, tmp_path):
+    """A miss drops the path's superseded fingerprints: after two
+    in-process rewrites the memo holds one frame entry and one count
+    entry for the path, not one per generation."""
+    from data_ingestor_gluejob_script_spark.queries._util import (
+        _session_memo,
+        load,
+        table_rowcount,
+    )
+
+    d1 = tmp_path / "sfz"
+    d1.mkdir()
+    path = str(d1 / "lineitem.parquet")
+    for n in (5, 7, 9):  # the first write, then two rewrites
+        spark.range(n).select(F.col("id").alias("l_orderkey")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        assert load(spark, str(d1), "lineitem").count() == n
+        assert table_rowcount(spark, str(d1), "lineitem") == n
+    kinds = sorted(k[0] for k in _session_memo(spark) if k[1] == path)
+    assert kinds == ["count", "frame"]
+
+
 def test_pin_storage_level_env_seam(monkeypatch):
     """r17 (r16 verdict #7): SPARK_GRAFT_PIN_LEVEL selects the
     storage level for the corpus-sized localCheckpoint pins; unset
