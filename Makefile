@@ -6,7 +6,7 @@
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: check test test-full correctness bench trace-ingest
+.PHONY: check test test-full correctness bench trace-ingest trace-query
 
 check: test correctness
 
@@ -36,3 +36,13 @@ trace-ingest:
 	print("failed", r["failed"], "of", r["attempted"]); \
 	[print(k, v["value"]) for k, v in sorted(r["metrics"].items()) \
 	 if k.startswith(("pipeline.upsert.", "pipeline.write_amp"))]'
+
+# One traced query run (seed 1); prints the checks' outcome and the
+# per-layer metrics of q_join_3hop and x_group_split (construct and
+# execute shares, jobs, shuffle and spill bytes, ...).
+trace-query:
+	python3 perfbench/run.py --workload query --seed 1 --seconds 25 --trace 1 \
+	| tail -n 1 | python3 -c 'import json, sys; r = json.load(sys.stdin); \
+	print("failed", r["failed"], "of", r["attempted"]); \
+	[print(k, v["value"]) for k, v in sorted(r["metrics"].items()) \
+	 if k.startswith("queries.")]'

@@ -16,13 +16,17 @@ Round counts measured on fixtures (test_graph.py): 64-node chain = 7
 rounds (vs 63 propagation-only), triangle+chain mix = 4, the sf0.001
 SimHash pair graph (7k edges) = 3.
 
-Scale shape per round: two keyed shuffles (edge⋈label join + groupBy
-min, then the label⋈label shortcut join). Labels are (node, long)
-pairs — the payload never travels. ``localCheckpoint`` truncates the
-plan each round: without it the lineage doubles per iteration and the
-job eventually dies in the optimizer, the classic iterative-DataFrame
-trap. Convergence is detected by counting changed labels (one scalar
-action per round).
+Scale shape: one job evaluates the edge plan (the strategy probe,
+which also fills the lazy edge pin). A graph of at most
+SMALL_GRAPH_EDGES edges is then solved on the driver and returned as
+an Arrow-built ``LocalRelation`` — no further job, and the planner
+sees its exact size. Larger graphs pay, per round, two keyed shuffles
+(edge⋈label join + groupBy min, then the label⋈label shortcut join).
+Labels are (node, long) pairs — the payload never travels.
+``localCheckpoint`` truncates the plan each round: without it the
+lineage doubles per iteration and the job eventually dies in the
+optimizer, the classic iterative-DataFrame trap. Convergence is
+detected by counting changed labels (one scalar action per round).
 """
 
 from __future__ import annotations
@@ -31,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import pin
+from ..session import local_frame, pin
 
 # Rounds used by the most recent connected_components call — exposed
 # for tests/benchmarks that pin the O(log diameter) convergence rate.
@@ -71,22 +75,29 @@ def connected_components(
     r16 optimization (guide §2.4 "remove shuffles outright", §1.2
     "the distributed algorithm first"): the edge plan — typically an
     EXPENSIVE candidate join (SimHash bands, the SemDeDup cell
-    self-join) — is materialized with ONE localCheckpoint before
-    anything else. The previous cut symmetrized FIRST
-    (``edges.union(edges.swapped)``), so the un-checkpointed pair
-    plan was evaluated twice (once per union arm), then paid a
+    self-join) — is evaluated ONCE, behind one localCheckpoint. A
+    cut that symmetrized FIRST (``edges.union(edges.swapped)``)
+    evaluated the pair plan twice (once per union arm), then paid a
     distinct shuffle and a second pass even when the driver path was
-    about to collect a few thousand rows anyway. Now: checkpoint →
-    count (cheap, on cached partitions) → small graphs collect the
-    raw directed edges straight into union-find (orientation and
+    about to collect a few thousand rows anyway. Small graphs collect
+    the raw directed edges straight into union-find (orientation and
     duplicates are irrelevant to union-find, so symmetrize/distinct
     buy nothing there); only the distributed path builds the
     symmetrized distinct edge list, from the checkpointed frame. The
-    size threshold now counts DIRECTED input edges (post self-loop
+    size threshold counts DIRECTED input edges (post self-loop
     filter) rather than symmetrized distinct rows — same order, and
     the driver collect stays bounded by the threshold either way.
     Measured (x_neardup_groups, sf0.1, warm): 5.9 → 3.3 s; the pair
     plan's stages ran once instead of twice.
+
+    The pin is lazy (``pin(..., eager=False)``): the strategy probe,
+    ``limit(threshold+1).collect()``, is the one job that evaluates
+    and caches the edges, and the distributed path reads that cache.
+    The small-graph result goes back through ``session.local_frame``
+    as one Arrow batch: a ``LocalRelation`` that the planner can
+    broadcast and that is read with no Python worker. Measured
+    (x_group_split, sf0.01, warm, 4-core host): construct jobs 7 → 6,
+    execute jobs 5 → 2, CPU per pass 1.89 → 1.03 s.
 
     Raises if the distributed propagation hasn't converged after
     ``max_iter`` rounds (log2(diameter) > max_iter — not a
@@ -94,18 +105,19 @@ def connected_components(
     global last_rounds
     src, dst = edges.columns[0], edges.columns[1]
     # ONE evaluation of the (expensive) edge plan, pinned for every
-    # consumer below
+    # consumer below; lazily, so the probe is the job that fills it
     eb = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
             F.col("a") != F.col("b")
-        )
+        ),
+        eager=False,
     )
     # ONE probe action decides the strategy AND (for small graphs)
-    # delivers every edge: limit(threshold+1) over the cached
-    # partitions returns all rows iff the graph is small — replacing
-    # the separate count() + collect() pair (r16: one fewer action
-    # barrier per call; this operator runs inside eagerly-constructed
-    # pipelines where each action costs a full scheduling round-trip).
+    # delivers every edge: limit(threshold+1) returns all rows iff the
+    # graph is small — replacing the separate count() + collect() pair
+    # (r16: one fewer action barrier per call; this operator runs
+    # inside eagerly-constructed pipelines where each action costs a
+    # full scheduling round-trip).
     probe = eb.limit(small_graph_edges + 1).collect()
     if len(probe) <= small_graph_edges:
         last_rounds = 0
@@ -134,7 +146,7 @@ def connected_components(
                 T.StructField("component", node_type),
             ]
         )
-        return edges.sparkSession.createDataFrame(rows, schema)
+        return local_frame(edges.sparkSession, rows, schema)
     # distributed path: symmetrize once (from the CHECKPOINTED edges —
     # cheap), so propagation only needs one direction
     sym = pin(

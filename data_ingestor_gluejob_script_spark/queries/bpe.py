@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from ._util import load, spread
 
 log = logging.getLogger(__name__)
@@ -72,8 +73,8 @@ _MERGES_SCHEMA = T.StructType(
 
 def _merges_frame(spark, merges: list[tuple[str, str]]) -> DataFrame:
     """Ordered [(left, right), ...] → the (rank, left, right) frame."""
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)], _MERGES_SCHEMA
+    return local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)], _MERGES_SCHEMA
     )
 
 

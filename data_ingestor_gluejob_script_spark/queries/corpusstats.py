@@ -820,6 +820,7 @@ def bm25_topk_frame(
     (tests/test_corpusstats.py). ``max_df_frac``/``df_table`` pass
     through to the search join (r15 scale knobs — see its docstring).
     """
+    # Not local_frame: a LocalRelation would change a measured join plan.
     queries = docs.sparkSession.createDataFrame(
         [(0, " ".join(query_terms))], "query_id long, text string"
     )
@@ -1078,6 +1079,7 @@ def bm25_search_join(
     # as the r14 explode cliff; the crossJoin of a 1-row broadcast is
     # a materialization barrier that keeps the score post-exchange,
     # and its cost is one broadcast of 8 bytes).
+    # Not local_frame: the barrier above was measured on this RDD form.
     avgdl_frame = (
         docs.sparkSession.createDataFrame(
             [(float(avg_dl),)], "avgdl double"

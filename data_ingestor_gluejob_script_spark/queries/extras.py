@@ -28,7 +28,7 @@ from ..operators.diff import table_diff_summary
 from ..operators.embed import semantic_dedup_docs
 from ..operators.multimodal import image_dedup_frame
 from ..operators.pca import fit_pca, project_pca
-from ..operators.graph import neardup_groups
+from ..operators.graph import connected_components, neardup_groups
 from .audit import (
     accepted_values,
     audit_report,
@@ -108,6 +108,7 @@ from .traindata import (
     split_leakage_report,
 )
 from ..shards import write_training_shards
+from ..session import local_frame
 
 
 def _shard_export_dir() -> str:
@@ -204,7 +205,8 @@ def x_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_parts = (
         changes.select(F.substring("created_at", 1, 7)).distinct().count()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_up, n_del, n_parts)],
         "n_upserted long, n_deleted long, n_partitions_touched long",
     )
@@ -549,13 +551,14 @@ def extras() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             _docs(s, d), standin_weights(s)
         ),
         # leakage-PROOF splits: near-dup groups move between splits
-        # as one unit (the preventive twin of x_split_leakage)
+        # as one unit (the preventive twin of x_split_leakage). The
+        # component map goes in as is: documents it omits are
+        # singletons, which key on their own doc_id
         "x_group_split": lambda s, d: group_aware_split_frame(
             load(s, d, "documents"),
-            neardup_groups(
-                q_simhash_neardup_pairs(s, d).select("doc_a", "doc_b"),
-                load(s, d, "documents"),
-            ),
+            connected_components(
+                q_simhash_neardup_pairs(s, d).select("doc_a", "doc_b")
+            ).toDF("doc_id", "group_id"),
         ),
         "x_split_leakage": lambda s, d: split_leakage_report(
             q_simhash_neardup_pairs(s, d).select("doc_a", "doc_b"),

@@ -72,12 +72,15 @@ def group_aware_split_frame(
     counterpart of split_leakage_report (which only measures the
     damage after a doc-keyed split).
 
-    ``groups`` is (doc_id, group_id) — e.g. operators.graph.
-    neardup_groups over the MinHash/SimHash pair list. Docs absent
-    from ``groups`` (singletons the pair list never mentions) key on
-    their own doc_id, which equals their would-be group id (group ids
-    are component-min doc_ids), so the assignment is identical whether
-    a singleton is listed or omitted.
+    ``groups`` is (doc_id, group_id). The component map itself
+    serves: operators.graph.connected_components over the
+    MinHash/SimHash pair list, renamed from (node, component) — that
+    is how x_group_split calls it, with no second join of the
+    documents (neardup_groups output works too). Docs absent from
+    ``groups`` (singletons the pair list never mentions) key on their
+    own doc_id, which equals their would-be group id (group ids are
+    component-min doc_ids), so the assignment is identical whether a
+    singleton is listed or omitted.
 
     Scale shape: one left join of docs against the group map (both
     sides shuffle on doc_id — the map is corpus-sized in the worst

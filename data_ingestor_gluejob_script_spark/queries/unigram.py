@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from .bpe import word_freq_frame
 
 MAX_PIECE_LEN = 8
@@ -200,9 +201,7 @@ def unigram_train(
     rows = [
         (p, math.log(v)) for p, v in sorted(probs.items())
     ]
-    return spark.createDataFrame(
-        rows, "piece string, logprob double"
-    )
+    return local_frame(spark, rows, "piece string, logprob double")
 
 
 def save_model(model: DataFrame, path: str) -> None:

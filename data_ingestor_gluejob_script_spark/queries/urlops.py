@@ -42,6 +42,7 @@ from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import local_frame
 from .corpusstats import cap_per_source_frame
 
 # Query parameters that identify a tracking campaign, not a resource.
@@ -273,8 +274,8 @@ def domain_filter_frame(
         raise ValueError(f"mode must be 'block' or 'allow', got {mode!r}")
     spark = df.sparkSession
     dom = F.broadcast(
-        spark.createDataFrame(
-            [(d.lower(),) for d in domains], "registered_domain string"
+        local_frame(
+            spark, [(d.lower(),) for d in domains], "registered_domain string"
         ).distinct()
     )
     parsed = parse_urls_frame(df, url_col)

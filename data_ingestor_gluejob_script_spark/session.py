@@ -143,10 +143,44 @@ def pin_storage_level():
     return level
 
 
-def pin(df):
+def pin(df, eager: bool = True):
     """``localCheckpoint`` at the configured pin level — one seam for
-    every corpus-sized pin; see :func:`pin_storage_level`."""
-    level = pin_storage_level()
-    if level is None:
-        return df.localCheckpoint()
-    return df.localCheckpoint(storageLevel=level)
+    every corpus-sized pin; see :func:`pin_storage_level`.
+
+    ``eager=True`` runs one job now that computes and caches every
+    partition. ``eager=False`` only marks the plan: the first action
+    over the returned frame caches the partitions it computes, and
+    before that action returns Spark computes any partitions it did
+    not read. So that first action is also the checkpoint job, and
+    every later reader still gets the once-evaluated data."""
+    return df.localCheckpoint(eager=eager, storageLevel=pin_storage_level())
+
+
+def local_frame(spark, rows, schema):
+    """A driver-built frame handed to the JVM as ONE Arrow batch.
+
+    ``rows`` is a sequence of tuples in field order; ``schema`` is a
+    ``StructType`` or a DDL string. The rows become a
+    ``pyarrow.Table`` typed by ``to_arrow_schema(schema)``, which
+    Spark turns into a ``LocalRelation``: it plans as a
+    ``LocalTableScan`` with exact size stats, so the planner can
+    broadcast it, and it needs no Python worker.
+    ``createDataFrame(list, schema)`` instead parallelizes pickled
+    rows into a Python RDD: every action that reads it starts Python
+    workers to unpickle them, and its stats-less ``Scan ExistingRDD``
+    is never broadcast."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=f.type)
+            for i, f in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -23,6 +23,7 @@ from data_ingestor_gluejob_script_spark.queries.textops import (  # noqa: E402
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+SF01_DIR = str(Path(SF_DIR).with_name("sf0.01"))
 
 
 def _uf_components(edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -139,12 +140,115 @@ def test_components_on_simhash_pairs(spark):
 
 def test_components_preserve_string_node_ids(spark):
     """The driver-side small-graph path must keep the caller's node id
-    type (string ids from e.g. subscription keys), like the
-    distributed path does."""
-    edges = [("a", "b"), ("b", "c"), ("x", "y")]
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r.node: r.component for r in connected_components(df).collect()}
-    assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
+    type (string ids from e.g. subscription keys, int and long keys),
+    like the distributed path does."""
+    for id_type, ids in [
+        ("string", ["a", "b", "c", "x", "y"]),
+        ("int", [1, 2, 3, 7, 8]),
+        ("long", [(1 << 40) + i for i in (0, 1, 2, 7, 8)]),
+    ]:
+        a, b, c, x, y = ids
+        df = spark.createDataFrame(
+            [(a, b), (b, c), (x, y)], f"src {id_type}, dst {id_type}"
+        )
+        comp = connected_components(df)
+        id_dtype = df.schema["src"].dataType
+        assert [f.dataType for f in comp.schema] == [id_dtype] * 2
+        got = {r.node: r.component for r in comp.collect()}
+        assert got == {a: a, b: a, c: a, x: x, y: x}
+
+
+def test_components_empty_edge_list(spark):
+    """No edges (or only self-loops) → an empty frame typed like the
+    node ids."""
+    for edges in ([], [("a", "a")]):
+        df = spark.createDataFrame(edges, "src string, dst string")
+        comp = connected_components(df)
+        assert comp.dtypes == [("node", "string"), ("component", "string")]
+        assert comp.collect() == []
+
+
+def test_components_small_path_is_a_local_relation(spark):
+    """The small-graph result reaches the JVM as one Arrow batch: its
+    executed plan is a LocalTableScan (exact size, broadcastable, no
+    Python worker), not a pickled Python RDD."""
+    df = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    comp = connected_components(df)
+    comp.collect()
+    plan = comp._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
+@pytest.mark.parametrize("small_graph_edges", [100, 0])
+def test_components_evaluate_edge_plan_once(spark, small_graph_edges):
+    """The lazy edge pin: the strategy probe is the one evaluation of
+    the edge plan, on both strategies (a Python UDF in the edge plan
+    counts rows into an accumulator)."""
+    from data_ingestor_gluejob_script_spark.operators import graph
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def _tick(v):
+        acc.add(1)
+        return v
+
+    # nondeterministic: the optimizer must not copy the call into the
+    # self-loop filter, which would evaluate it twice per row
+    tick = F.udf(_tick, "long").asNondeterministic()
+    edges = [(i, i + 1) for i in range(30)] + [(50, 51), (51, 52)]
+    df = spark.createDataFrame(edges, "src long, dst long").repartition(4)
+    comp = connected_components(
+        df.select(tick("src").alias("src"), "dst"),
+        small_graph_edges=small_graph_edges,
+    ).collect()
+    assert (graph.last_rounds == 0) == (small_graph_edges > 0)
+    assert len(comp) == 31 + 3
+    assert acc.value == len(edges)
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the
+    number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_group_split_job_counts_and_output(spark):
+    """x_group_split on sf0.01 keys on the component map directly. A
+    warm pass launches at most 6 jobs to construct (the pair plan
+    evaluated once by the components probe, no separate checkpoint
+    job) and at most 2 to execute into a noop sink (the component map
+    is a broadcast LocalRelation, not a pickled Python RDD). Its rows
+    equal the neardup_groups formulation's."""
+    from data_ingestor_gluejob_script_spark.queries.extras import extras
+    from data_ingestor_gluejob_script_spark.queries.traindata import (
+        group_aware_split_frame,
+    )
+
+    sf = SF01_DIR
+    fn = extras()["x_group_split"]
+    got = fn(spark, sf).collect()  # warm: file listings, memoized loads
+
+    df, construct = _jobs_in(
+        spark, "x_group_split.construct", lambda: fn(spark, sf)
+    )
+    _, execute = _jobs_in(
+        spark, "x_group_split.execute",
+        lambda: df.write.format("noop").mode("overwrite").save(),
+    )
+    assert construct <= 6
+    assert execute <= 2
+
+    docs = load(spark, sf, "documents")
+    pairs = q_simhash_neardup_pairs(spark, sf).select("doc_a", "doc_b")
+    want = group_aware_split_frame(docs, neardup_groups(pairs, docs))
+    assert sorted(got) == sorted(want.collect())
 
 
 @pytest.mark.slow

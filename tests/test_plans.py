@@ -202,6 +202,54 @@ def test_no_unlisted_global_order_windows_in_package():
     assert not unlisted, f"unallowlisted global-order windows: {unlisted}"
 
 
+# Every createDataFrame call in the package must be listed here, keyed
+# by its module and its data argument. Python rows on the driver go
+# through session.local_frame, one Arrow batch that plans as a
+# LocalTableScan; createDataFrame over a Python list parallelizes
+# pickled rows into a stats-less Python RDD that starts Python workers
+# on every read and is never broadcast.
+CREATE_DATAFRAME_ALLOWLIST = {
+    # the Arrow hand-off itself: a pyarrow.Table, not Python rows
+    ("session.py", "table"),
+    # input is already an RDD (zipWithIndex line numbers)
+    ("queries/classifier.py", "lines"),
+    # no rows: a schema-only frame for an empty shard overlap
+    ("shards.py", "[]"),
+    # BM25 single-query frame: a LocalRelation changes the measured
+    # search-join plan, so switching needs its own measurement
+    ("queries/corpusstats.py", "[(0, ' '.join(query_terms))]"),
+    # index-time avgdl: its crossJoin is a measured materialization
+    # barrier, so switching needs its own measurement
+    ("queries/corpusstats.py", "[(float(avg_dl),)]"),
+}
+
+
+def test_no_unlisted_create_dataframe_in_package():
+    """Package-wide guard: sweep the source for createDataFrame calls;
+    any not on the allowlist fails the build, so driver-built Python
+    rows keep going through session.local_frame."""
+    import ast
+    import pathlib
+
+    pkg = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "data_ingestor_gluejob_script_spark"
+    )
+    hits = set()
+    for py in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                data = ast.unparse(node.args[0]) if node.args else ""
+                hits.add((str(py.relative_to(pkg)), data))
+    unlisted = hits - CREATE_DATAFRAME_ALLOWLIST
+    assert not unlisted, f"createDataFrame outside local_frame: {unlisted}"
+    assert CREATE_DATAFRAME_ALLOWLIST <= hits, "stale allowlist entries"
+
+
 def test_revenue_star_join_pushes_region_filter_and_broadcasts(plans):
     p = plans("q_revenue_by_nation")
     assert "EqualTo(r_name,ASIA)" in p  # region filter reaches the scan

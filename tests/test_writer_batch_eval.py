@@ -54,8 +54,12 @@ def _batch(spark, rows):
     )
 
 
-def _n_persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _persisted(spark) -> set:
+    """Ids of the persisted RDDs. Spark holds this map with weak
+    values, so a JVM GC during a test drops RDDs that earlier tests
+    left unreachable; a test checks that no id outside its starting
+    set remains, not that the count is unchanged."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _listing(root: str) -> dict:
@@ -87,18 +91,18 @@ def clean_table(spark):
 
 @ARMS
 def test_empty_batch_skips_and_leaves_lake(spark, lake, broadcast_batch):
-    before, cached = _listing(lake), _n_persisted(spark)
+    before, cached = _listing(lake), _persisted(spark)
     n = write_partitioned_upsert(
         spark, _batch(spark, []), SUBS, lake, broadcast_batch=broadcast_batch
     )
     assert n == 0
     assert _listing(lake) == before
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
 
 
 @ARMS
 def test_empty_batch_with_delete_keys_raises(spark, lake, broadcast_batch):
-    before, cached = _listing(lake), _n_persisted(spark)
+    before, cached = _listing(lake), _persisted(spark)
     keys = spark.createDataFrame([("s1",)], "id string")
     with pytest.raises(ValueError, match="delete_keys requires"):
         write_partitioned_upsert(
@@ -111,12 +115,12 @@ def test_empty_batch_with_delete_keys_raises(spark, lake, broadcast_batch):
             broadcast_batch=broadcast_batch,
         )
     assert _listing(lake) == before
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
 
 
 @ARMS
 def test_null_id_batch_raises_and_leaves_lake(spark, lake, broadcast_batch):
-    before, cached = _listing(lake), _n_persisted(spark)
+    before, cached = _listing(lake), _persisted(spark)
     rows = DAY + [_row(None, "2024-05-01 08:00:00")]
     with pytest.raises(ValueError, match="NULL id"):
         write_partitioned_upsert(
@@ -127,7 +131,7 @@ def test_null_id_batch_raises_and_leaves_lake(spark, lake, broadcast_batch):
             broadcast_batch=broadcast_batch,
         )
     assert _listing(lake) == before
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
 
 
 def test_failing_write_releases_cached_batch(spark, tmp_path):
@@ -135,19 +139,19 @@ def test_failing_write_releases_cached_batch(spark, tmp_path):
     fails after the batch was evaluated and cached."""
     blocker = tmp_path / "not_a_dir"
     blocker.write_text("x")
-    cached = _n_persisted(spark)
+    cached = _persisted(spark)
     with pytest.raises(Exception):
         write_partitioned_upsert(
             spark, _batch(spark, DAY), SUBS, str(blocker), broadcast_batch=True
         )
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
 
 
 def test_successful_write_releases_cached_batch(spark, lake):
-    cached = _n_persisted(spark)
+    cached = _persisted(spark)
     n = write_partitioned_upsert(spark, _batch(spark, DAY), SUBS, lake)
     assert n == 3  # the touched partitions hold s1, s3, s4
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
     got = {
         r.id: r.status
         for r in spark.read.parquet(
@@ -169,7 +173,7 @@ def test_streaming_upsert_releases_cached_batches(spark, tmp_path):
     store = WatermarkStore(
         str(tmp_path / "wm.json"), [SUBS.name], now=datetime(2024, 5, 1)
     )
-    cached = _n_persisted(spark)
+    cached = _persisted(spark)
     for i, r in enumerate(DAY):
         with open(os.path.join(src, f"drop{i}.csv"), "w") as f:
             f.write(";".join(SUBS.columns) + "\n")
@@ -179,7 +183,7 @@ def test_streaming_upsert_releases_cached_batches(spark, tmp_path):
         )
         q.awaitTermination()
     assert q.lastProgress["batchId"] == 2
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
     got = spark.read.parquet(pipeline.lake_table_root(lake_root, SUBS.name))
     assert {r.id for r in got.select("id").collect()} == {"s1", "s3", "s4"}
 
@@ -214,20 +218,20 @@ def test_bucketed_writer_evaluates_broadcast_batch_once(spark, clean_table):
         spark, _batch(spark, BASE), SUBS, TABLE, num_buckets=4
     )
     batch, acc = _counted_batch(spark, DAY)
-    cached = _n_persisted(spark)
+    cached = _persisted(spark)
     n = write_partitioned_upsert_bucketed(
         spark, batch, SUBS, TABLE, num_buckets=4, broadcast_batch=True
     )
     assert n == 3  # the touched partitions hold s1, s3, s4
     assert acc.value == len(DAY)
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
 
 
 def test_bucketed_writer_empty_batch_skips(spark, clean_table):
-    cached = _n_persisted(spark)
+    cached = _persisted(spark)
     n = write_partitioned_upsert_bucketed(
         spark, _batch(spark, []), SUBS, TABLE, num_buckets=4
     )
     assert n == 0
     assert not spark.catalog.tableExists(TABLE)
-    assert _n_persisted(spark) == cached
+    assert _persisted(spark) <= cached
