@@ -136,9 +136,10 @@ def merge_upsert(
       join (SQL equality semantics) instead of colliding — hence the
       safe default.
 
-    Measured at sf10/sf100 in tools/bucketed_upsert.py (SCALE.md);
-    equality to upsert_dedup pinned by differential tests including
-    duplicate and null keys on both sides.
+    Measured at sf10/sf100 (SCALE.md "Round-13: join-formulated
+    upsert + bucketed lake"); equality to upsert_dedup pinned by
+    differential tests including duplicate and null keys on both
+    sides.
     """
     if isinstance(id_cols, str):
         id_cols = [id_cols]

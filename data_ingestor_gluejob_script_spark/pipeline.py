@@ -30,7 +30,7 @@ Scale notes (100 TB): the only shuffles are the upsert window on the
 id column and the write's partition split; both are keyed, AQE-sized,
 and skew-split. The touched-partition set is the one driver-side
 result — a list of (year, month) pairs, bounded by the calendar, not
-the data. Both lake writers get it, with the batch's row count (the
+the data. The lake writer gets it, with the batch's row count (the
 empty-batch skip) and NULL-id count (the PK guard), from ONE
 evaluation of the batch (``_evaluated_batch``): a ``noop`` write
 carrying an Observation.
@@ -97,7 +97,7 @@ def _evaluated_batch(
     delete_touched: list[tuple] | None = None,
 ):
     """Evaluate the prepared batch once, with one ``noop`` write
-    carrying an Observation, for everything both lake writers must
+    carrying an Observation, for everything the lake writer must
     know before the merge: its row count (the empty-batch skip), its
     NULL-id count (the PK guard) and the (year, month) partitions it
     touches. Yields ``(prepared, touched, batch_touched, n_rows)``,
@@ -107,7 +107,7 @@ def _evaluated_batch(
     failed write — because the streaming sink calls the writer once
     per micro-batch.
 
-    The PK guard matters because both writers run the merge's anti
+    The PK guard matters because the writer runs the merge's anti
     join with plain-equality keys (``keys_nullable=False``), which is
     only sound because no row with a NULL id ever enters the lake —
     enforced HERE, on every write including the initial load, so the
@@ -156,10 +156,10 @@ def _evaluated_batch(
 
 
 def _prepare_batch(batch: DataFrame, spec: TableSpec) -> DataFrame:
-    """Shared batch normalization both lake writers run: boolean
-    dict-map (O1, gluejob.py:181), partition derivation from the
-    created-at column (O5, gluejob.py:182-185), and the microsecond
-    strftime round-trip of the timestamp column (O4,
+    """Batch normalization the lake writer runs before the merge:
+    boolean dict-map (O1, gluejob.py:181), partition derivation from
+    the created-at column (O5, gluejob.py:182-185), and the
+    microsecond strftime round-trip of the timestamp column (O4,
     gluejob.py:174)."""
     return (
         normalize_booleans(batch, spec.boolean_cols)
@@ -177,8 +177,7 @@ def _scope_existing(
     touched: list[tuple],
     company: str,
 ) -> DataFrame:
-    """The lake rows one merge must consider, shared by the hive-path
-    and bucketed-table writers.
+    """The lake rows one merge must consider.
 
     Partition-scoped (gluejob.py:190-205): only lake partitions the
     batch touches (null-safety: see _partition_predicate), and only
@@ -615,342 +614,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def _table_location(spark: SparkSession, table_name: str) -> str:
-    """Storage location of a catalog table, via DESCRIBE FORMATTED —
-    public API, works for any catalog/path scheme."""
-    rows = spark.sql(f"DESCRIBE FORMATTED {table_name}").collect()
-    for r in rows:
-        if r["col_name"].strip() == "Location":
-            return r["data_type"].strip()
-    raise ValueError(f"no Location in DESCRIBE FORMATTED {table_name}")
-
-
-def _rm_dir(spark: SparkSession, path: str) -> None:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, True)
-
-
-def _dir_has_success(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` holds a COMPLETE Spark write (its committer's
-    ``_SUCCESS`` marker exists) — how the compaction resume path tells
-    an authoritative snapshot from a partial one."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(p))
-
-
-def _success_mtime(spark: SparkSession, path: str) -> int | None:
-    """Modification time (epoch ms) of ``path``'s ``_SUCCESS`` marker,
-    or None when absent — the timestamp token the compaction
-    stale-resume guard compares table writes against."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_SUCCESS")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    return int(fs.getFileStatus(p).getModificationTime())
-
-
-def _max_data_mtime(spark: SparkSession, path: str) -> int | None:
-    """Newest modification time (epoch ms) across a table location's
-    COMMITTED data files — every hidden path (any component starting
-    with ``_`` or ``.``: staging dirs, committer ``_temporary``,
-    markers) is excluded, so only files a reader would see count."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return None
-    root_uri = str(fs.makeQualified(root).toUri().getPath()).rstrip("/")
-    newest = None
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        rel = str(st.getPath().toUri().getPath())[len(root_uri):]
-        if any(c and c[0] in "_." for c in rel.split("/")):
-            continue
-        m = int(st.getModificationTime())
-        if newest is None or m > newest:
-            newest = m
-    return newest
-
-
-def _insert_partition_overwrite(
-    spark: SparkSession, df: DataFrame, table_name: str, dynamic: bool = True
-) -> None:
-    """``INSERT OVERWRITE`` into a catalog table with an explicit
-    partition-overwrite mode. ``insertInto`` ignores writer-level
-    ``partitionOverwriteMode`` options (verified on Spark 4.1: a
-    writer-option "dynamic" under a static session still wiped
-    untouched partitions), so the session conf is set for the insert
-    and restored after — the same vanilla-session-safety contract the
-    hive-path writer gets from its per-writer option."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic" if dynamic else "static")
-    try:
-        df.write.insertInto(table_name, overwrite=True)
-    finally:
-        spark.conf.set(key, old)
-
-
-def write_partitioned_upsert_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    spec: TableSpec,
-    table_name: str,
-    *,
-    num_buckets: int = 32,
-    company: str = "Locaweb",
-    broadcast_batch: bool = True,
-) -> int:
-    """K1 on a BUCKETED lake: same merge semantics as
-    ``write_partitioned_upsert`` (same batch normalization, same
-    null-id PK guard, same partition+company scoping, same
-    ``merge_upsert(existing_unique=True, keys_nullable=False)``), but
-    the lake is a catalog table partitioned by (company, year, month)
-    AND bucketed+sorted on ``spec.id_col`` — the layout under which
-    the backfill arm's sort-merge anti join reads the lake with no
-    Exchange and no Sort (measured 2.55×/decade at sf100 in
-    tools/bucketed_upsert.py vs 6.33× for the window form; plan
-    pinned by tests/test_merge_upsert.py). Use this mode when batches
-    are routinely backfill-sized; for daily increments the hive-path
-    writer's broadcast arm is already Exchange-free on the lake.
-
-    Mechanics the layout forces (why this isn't just a writer flag):
-
-    - Bucket metadata lives in the catalog, so the lake is
-      ``saveAsTable``-managed and merges write back via ``INSERT
-      OVERWRITE`` (the bucketed write path stamps bucket ids into
-      file names; writing bare parquet into the table directory would
-      corrupt the layout readers trust).
-    - Spark refuses an INSERT OVERWRITE whose plan reads the target
-      table (UNSUPPORTED_OVERWRITE), so the merged touched partitions
-      stage through a ``_staging`` subdirectory of the table location
-      (underscore-prefixed → invisible to table scans) and re-insert
-      from there. The staging pass costs one extra write+read of the
-      TOUCHED partitions only — the price of keeping the lake scan
-      bucketed during the merge itself.
-    - Dynamic partition overwrite on insert comes from session conf,
-      set-and-restored per write (see _insert_partition_overwrite).
-
-    Returns rows written (0 = empty batch skipped, the F2 guard).
-    """
-    with _evaluated_batch(batch, spec, broadcast_batch) as (
-        prepared,
-        touched,
-        _,
-        n_rows,
-    ):
-        if n_rows == 0:
-            log.info("skip empty batch for %s", spec.name)
-            return 0
-
-        ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
-        if not spark.catalog.tableExists(table_name):
-            (
-                prepared.withColumn("company", F.lit(company))
-                .select(*spec.columns, "company", ycol, mcol)
-                .write.format("parquet")
-                .partitionBy("company", ycol, mcol)
-                .bucketBy(num_buckets, spec.id_col)
-                .sortBy(spec.id_col)
-                .saveAsTable(table_name)
-            )
-            log.info(
-                "created bucketed lake %s with %d rows", table_name, n_rows
-            )
-            return n_rows
-
-        lake = spark.table(table_name)
-        existing = _scope_existing(
-            lake, prepared, spec, ycol, mcol, touched, company
-        )
-        if not broadcast_batch:
-            # Conform the incoming side to the lake's bucket layout
-            # BEFORE the merge: the incoming dedup window would
-            # otherwise shuffle at AQE's initial width, and when the
-            # sort-merge join then aligns partition COUNTS it
-            # re-shuffles the 4-vs-256 smaller child — the bucketed
-            # lake — forfeiting the Exchange-free scan this layout
-            # exists for (observed: the planner's autoBucketedScan then
-            # disables bucketed reading entirely). One explicit
-            # hash(id, num_buckets) shuffle of the batch makes the
-            # window AND the join reuse it: the lake side never moves.
-            # AQE does not coalesce user-specified repartitions, so the
-            # alignment holds regardless of batch size.
-            prepared = prepared.repartition(num_buckets, spec.id_col)
-        merged = merge_upsert(
-            prepared,
-            existing,
-            spec.id_col,
-            existing_unique=True,  # this writer's own uniqueness invariant
-            broadcast_incoming=broadcast_batch,
-            keys_nullable=False,  # PK contract, guarded above — keeps
-            # the bucketed lake scan Exchange-free under the sort-merge arm
-        )
-        staging = f"{_table_location(spark, table_name)}/_staging"
-        obs = Observation(f"upsert_bucketed_{spec.name}")
-        out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
-            "company", F.lit(company)
-        )
-        try:
-            out.select(*lake.columns).write.mode("overwrite").parquet(staging)
-            n = int(obs.get["n"])
-            staged = spark.read.parquet(staging).select(*lake.columns)
-            _insert_partition_overwrite(
-                spark, staged, table_name, dynamic=True
-            )
-        finally:
-            _rm_dir(spark, staging)
-        log.info("upserted %d rows into bucketed lake %s", n, table_name)
-        return n
-
-
-def compact_bucketed_table(
-    spark: SparkSession, table_name: str, bucket_col: str, num_buckets: int
-) -> int:
-    """Small-file compaction for a bucketed lake table, preserving the
-    bucket layout: each insert leaves one file per bucket PER WRITE
-    TASK, so partitions accumulate up to tasks×buckets files per
-    rewrite. Re-inserting the table clustered on the bucket column
-    collapses that to one file per (partition, bucket) — ``repartition
-    (num_buckets, bucket_col)`` uses the same murmur3 hash family as
-    bucket assignment, so each task holds exactly one bucket's rows.
-
-    Same staging dance as the upsert (Spark refuses a self-reading
-    INSERT OVERWRITE); the insert is STATIC overwrite — a full-table
-    rewrite, which is what compaction is. Bucket metadata is
-    catalog-owned and untouched by inserts, so the layout (and every
-    Exchange-free plan built on it) survives — asserted in
-    tests/test_bucketed_writer.py. Returns rows rewritten.
-
-    Failure safety: static overwrite TRUNCATES the table before the
-    rewrite commits, so — unlike the upsert's dynamic overwrite, where
-    deletion defers to commit — a mid-insert failure (disk full,
-    exhausted retries) can leave the lake wiped while the staging copy
-    is the only surviving full snapshot. The staging directory is
-    therefore removed only AFTER a successful insert. A stale staging
-    at entry is interpreted by its ``_SUCCESS`` marker (review r15 —
-    the first cut deleted staging unconditionally, which on a
-    retry-after-truncation re-staged the EMPTY table and committed it
-    as a silent total loss):
-
-    - staging WITH ``_SUCCESS``: the previous run completed the
-      snapshot and then died in (or before finishing) the truncating
-      insert — the snapshot is authoritative; resume by inserting IT,
-      never by re-reading the possibly-truncated table.
-    - staging WITHOUT ``_SUCCESS``: the previous run died mid-snapshot
-      — the table was never touched; drop the partial copy and stage
-      fresh.
-
-    Stale-resume guard (advice r15): a snapshot is authoritative only
-    while the table holds NO writes newer than it. If the previous
-    insert actually SUCCEEDED and the process died before staging
-    cleanup, later upserts can land in the table; auto-resuming would
-    then static-overwrite the table with the pre-upsert snapshot —
-    silently reverting every row written since. Two defenses: (a) the
-    ``_SUCCESS`` marker is deleted IMMEDIATELY after a successful
-    insert (one FS op before the directory delete, shrinking the
-    stale-snapshot window to milliseconds), and (b) on resume, the
-    newest committed table data-file mtime is compared against the
-    snapshot's ``_SUCCESS`` mtime — table-newer means writes landed
-    after the snapshot was taken, so the resume REFUSES with the
-    snapshot kept for manual reconciliation. A failed insert commits
-    nothing (the committer publishes data files only at job commit),
-    so genuine crash recovery always passes this check.
-
-    Scale contract: this is deliberately a FULL-table rewrite — the
-    point of bucketed-lake compaction is to restore the one-file-per-
-    (partition, bucket) invariant that upsert write tasks erode, and
-    that clustering is global (every row must land in its murmur3
-    bucket file). Run it as scheduled maintenance at the deployment's
-    cadence, not per-batch; incremental tail-packing (the append-lake
-    compactor's shape) cannot apply because bucket membership, not
-    file size, dictates placement.
-    """
-    lake = spark.table(table_name)
-    staging = f"{_table_location(spark, table_name)}/_compact_staging"
-    resume = _dir_has_success(spark, staging)
-    if resume:
-        snap_ts = _success_mtime(spark, staging)
-        table_ts = _max_data_mtime(spark, _table_location(spark, table_name))
-        # >= not >: object stores truncate mtimes to whole seconds, so
-        # an upsert committing within the snapshot's granule would tie
-        # and slip past a strict comparison into the silent revert. A
-        # tie therefore REFUSES — fail-safe toward manual
-        # reconciliation; genuine crash recovery always has table
-        # files strictly older than the snapshot (a failed insert
-        # commits nothing), or a truncated/empty table (None).
-        if snap_ts is not None and table_ts is not None and table_ts >= snap_ts:
-            raise RuntimeError(
-                f"compact {table_name}: staging snapshot at {staging} "
-                f"predates committed table writes (snapshot _SUCCESS "
-                f"{snap_ts} <= newest table file {table_ts}) — a prior "
-                "compaction's insert likely succeeded before cleanup "
-                "died, and rows were written since; auto-resume would "
-                "revert them. The snapshot is KEPT; reconcile manually "
-                "(drop the staging dir to accept the current table, or "
-                "insert the snapshot yourself to accept it)"
-            )
-        log.warning(
-            "compact %s: resuming from the complete staging snapshot "
-            "at %s (previous run failed during the insert phase)",
-            table_name,
-            staging,
-        )
-        n = spark.read.parquet(staging).count()
-    else:
-        _rm_dir(spark, staging)  # partial snapshot; table untouched
-        obs = Observation(f"compact_{table_name}")
-        try:
-            (
-                lake.observe(obs, F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-        except BaseException:
-            # snapshot-phase failure: the table is INTACT — say so, and
-            # drop the partial copy so a retry can't mistake it for a
-            # recovery snapshot
-            log.error(
-                "compact %s: staging write failed; the table is intact "
-                "and the partial staging at %s was discarded",
-                table_name,
-                staging,
-            )
-            _rm_dir(spark, staging)
-            raise
-        n = int(obs.get["n"])
-    try:
-        staged = (
-            spark.read.parquet(staging)
-            .repartition(num_buckets, bucket_col)
-            .select(*lake.columns)
-        )
-        _insert_partition_overwrite(spark, staged, table_name, dynamic=False)
-    except BaseException:
-        log.error(
-            "compact %s: insert failed AFTER the table may have been "
-            "truncated; the complete staging snapshot is KEPT at %s — "
-            "re-running compact_bucketed_table resumes from it",
-            table_name,
-            staging,
-        )
-        raise
-    # Revoke the snapshot's authority FIRST (advice r15): the insert
-    # has committed, so from here the snapshot is stale — one marker
-    # delete closes the resume window before the (slower, many-file)
-    # directory delete runs.
-    _rm_dir(spark, f"{staging}/_SUCCESS")
-    _rm_dir(spark, staging)
-    return n
-
-
 class LocalFileSource:
     """Incremental source over a directory of per-table CSV files —
     the JDBC seam's file-backed twin, used in tests and anywhere a
@@ -1012,53 +675,12 @@ class RunResult:
     skipped: list[str] = field(default_factory=list)
 
 
-def bucketed_lake_table(table: str, prefix: str = "lake_") -> str:
-    """Catalog-table name the bucketed writer mode uses for ``table``
-    (catalog tables live in the warehouse, not under ``lake_root``)."""
-    return f"{prefix}{table}"
-
-
-def _flow_write(
-    spark: SparkSession,
-    df: DataFrame,
-    spec: TableSpec,
-    lake_root: str,
-    company: str,
-    writer: str,
-    num_buckets: int,
-    broadcast_batch: bool,
-) -> int:
-    """The flow's writer seam: ``hive`` (default) is the reference-
-    parity partitioned-directory lake; ``bucketed`` routes the same
-    batch through write_partitioned_upsert_bucketed (r14's measured
-    backfill layout) — same upsert semantics, same watermark protocol
-    (the writers return identical row counts; asserted equal in
-    tests/test_pipeline_bucketed_flow.py)."""
-    if writer == "bucketed":
-        return write_partitioned_upsert_bucketed(
-            spark,
-            df,
-            spec,
-            bucketed_lake_table(spec.name),
-            num_buckets=num_buckets,
-            company=company,
-            broadcast_batch=broadcast_batch,
-        )
-    if writer != "hive":
-        raise ValueError(f"unknown writer mode: {writer!r}")
-    return write_partitioned_upsert(
-        spark, df, spec, lake_root, company, broadcast_batch=broadcast_batch
-    )
-
-
 def initial_load(
     spark: SparkSession,
     source_root: str,
     lake_root: str,
     tables: list[str],
     company: str = "Locaweb",
-    writer: str = "hive",
-    num_buckets: int = 32,
 ) -> RunResult:
     """Entry point 1 (gluejob.py:163-171): per-table CSV → lake.
     Missing CSV → log + continue (gluejob.py:167-169)."""
@@ -1076,9 +698,8 @@ def initial_load(
         # the sort-merge arm — force-broadcasting every key of a
         # 100M-row table would blow the 8 GB broadcast limit on a
         # re-run over an existing lake (r13 review)
-        result.tables[t] = _flow_write(
-            spark, df, spec, lake_root, company, writer, num_buckets,
-            broadcast_batch=False,
+        result.tables[t] = write_partitioned_upsert(
+            spark, df, spec, lake_root, company, broadcast_batch=False
         )
     return result
 
@@ -1090,8 +711,6 @@ def incremental(
     tables: list[str],
     store: WatermarkStore,
     company: str = "Locaweb",
-    writer: str = "hive",
-    num_buckets: int = 32,
 ) -> RunResult:
     """Entry point 2 (gluejob.py:157-161): per-table changed rows →
     partition-scoped upsert → in-memory watermark advance to the t0
@@ -1105,9 +724,8 @@ def incremental(
             log.error("source read failed for %s — skipping", t)
             result.skipped.append(t)
             continue
-        result.tables[t] = _flow_write(
-            spark, df, spec, lake_root, company, writer, num_buckets,
-            broadcast_batch=True,
+        result.tables[t] = write_partitioned_upsert(
+            spark, df, spec, lake_root, company, broadcast_batch=True
         )
         store.advance(t, t0)
     return result
@@ -1122,29 +740,16 @@ def run(
     source_root: str | None = None,
     source=None,
     company: str = "Locaweb",
-    writer: str = "hive",
-    num_buckets: int = 32,
 ) -> RunResult:
     """C1 flow dispatch (gluejob.py:144-155): OnDemand → initial load,
     Scheduled → incremental, anything else → explicit no-op
     (README.md:17). The watermark commit runs in every path, including
-    the no-op — matching gluejob.py:623. ``writer`` selects the lake
-    layout (hive partitioned dirs, or the bucketed catalog tables) —
-    validated HERE, before any source I/O, so a typo fails fast at the
-    dispatch altitude instead of after the first table's read."""
-    if writer not in ("hive", "bucketed"):
-        raise ValueError(f"unknown writer mode: {writer!r}")
+    the no-op — matching gluejob.py:623."""
     tables = tables_list(job_mode)  # C2; unknown mode → [] → no-op
     if trigger_origin == "OnDemand":
-        result = initial_load(
-            spark, source_root, lake_root, tables, company, writer,
-            num_buckets,
-        )
+        result = initial_load(spark, source_root, lake_root, tables, company)
     elif trigger_origin == "Scheduled":
-        result = incremental(
-            spark, source, lake_root, tables, store, company, writer,
-            num_buckets,
-        )
+        result = incremental(spark, source, lake_root, tables, store, company)
     else:
         log.info("unmapped JobTriggerOrigin=%r — no-op", trigger_origin)
         result = RunResult("no-op")

@@ -128,11 +128,11 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming = watermark_filter(orders, "o_orderdate", WM_UPSERT).withColumn(
         "o_totalprice", F.lit(0.0)
     )
-    # The WM_UPSERT slice is ~62% of orders — a backfill, the arm
-    # tools/bucketed_upsert.py labels "too big to broadcast" — so the
-    # registered-shape twin must take the sort-merge arm; the default
-    # broadcast would force-collect ~93M keys to the driver at sf100
-    # (r13 review finding).
+    # The WM_UPSERT slice is ~62% of orders — a backfill (the backfill
+    # arms of SCALE.md "Round-13: join-formulated upsert + bucketed
+    # lake") — so the registered-shape twin must take the sort-merge
+    # arm; the default broadcast would force-collect ~93M keys to the
+    # driver at sf100 (r13 review finding).
     return merge_upsert(
         incoming, orders, "o_orderkey", broadcast_incoming=False
     )

@@ -513,8 +513,8 @@ def extras() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # posting rows; on the 31-word testdata vocabulary every term
         # is common so this measures the pruned plan's WORST case
         # (nearly everything cut, pass-2 stream near-empty). The
-        # natural-vocabulary decades live in the Zipf smoke
-        # (tools/bm25_zipf_smoke.py, SCALE.md r15).
+        # natural-vocabulary decades are in SCALE.md "Round-15: BM25
+        # on a natural vocabulary".
         "x_bm25_search_pruned": lambda s, d: bm25_search_join(
             _docs(s, d),
             load(s, d, "documents")

@@ -17,6 +17,21 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` for a session this process launches:
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else 60 % of the host's
+    physical RAM in whole GiB, at least 1g and at most 24g. A fixed
+    24g heap on a 15 GB host lets the JVM grow past what the machine
+    has. Under that heap the ingest benchmark's peak driver RSS
+    measured 2.2–3.5 GB (perfbench/METRICS.md), so the derived heap
+    binds only on small hosts."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(24, max(1, int(ram * 0.6) // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "data-ingestor-spark",
     master: str | None = None,
@@ -70,12 +85,13 @@ def get_spark(
         # normalization lives in queries/_util.read_events.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        # Managed-table scratch (e.g. the fuzzy join's bucketed
-        # variant table) belongs in temp space, not a ./spark-warehouse
+        # Managed-table scratch (write_bucketed's catalog tables, e.g.
+        # the bucketed 3-hop layout of SCALE.md "Round-12: the bucketed
+        # lake layout") belongs in temp space, not a ./spark-warehouse
         # dir inside whatever cwd launched the job. Per-user suffix:
         # on a multi-user host a fixed shared path is owned by
         # whoever ran first, and other users' managed-table writes
-        # (fixed table names like bucketed_3hop's) fail or collide.
+        # (fixed table names) fail or collide.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE")
@@ -86,7 +102,17 @@ def get_spark(
         # Only effective when THIS call launches the JVM — getOrCreate
         # against an already-running session keeps its original heap.
         # For spark-submit deployments set it on the submit command.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
+        # G1 sizes its regions from the max heap: 16 MB under a 24g
+        # heap, 8 MB under the 9g a 15 GB host now gets. At 8 MB every
+        # object of 4 MB or more is a humongous allocation straight
+        # into the old generation: one ingest benchmark run (4 cores,
+        # seed 3) took 206 young collections and 7.9 s of GC CPU at
+        # 9g, against 88 and 4.0 s at 24g; 9g with 16 MB regions took
+        # 88 and 4.1 s. Spark prepends this to
+        # spark.driver.extraJavaOptions, so a caller's own JVM options
+        # still apply.
+        .config("spark.driver.defaultJavaOptions", "-XX:G1HeapRegionSize=16m")
         # Generated-class cache (static conf, default 100 entries).
         # r17, measured: a driver that runs MANY distinct plans in one
         # JVM — this engine's inventory is 120 benched paths; a

@@ -2,7 +2,8 @@
 the lake side of the join formulation carries no Exchange when the
 incoming batch broadcasts, and none either under sort-merge when the
 lake is bucketed+sorted on the id (the 100-TB upsert layout answer,
-measured at sf10/sf100 by tools/bucketed_upsert.py)."""
+measured at sf10/sf100 in SCALE.md "Round-13: join-formulated upsert
++ bucketed lake")."""
 
 from __future__ import annotations
 

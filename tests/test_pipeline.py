@@ -181,6 +181,36 @@ def test_incremental_upsert_and_watermark(spark, tmp_path, initial_loaded, lake)
     for t in TABLES:
         assert store.get(t) == "2024-03-05 04:00:00"
 
+    # A second Scheduled day on top: s3 changes, s4 is new.
+    inc2 = str(tmp_path / "inc2")
+    _write_csv(
+        inc2,
+        SUBS,
+        [
+            _sub("s3", "2024-03-02 11:00:00", "2024-03-28 09:00:00", status="upgraded"),
+            _sub("s4", "2024-04-01 08:00:00", "2024-04-01 08:00:00"),
+        ],
+    )
+    _write_csv(inc2, PLANS, [_plan("p4", "s4", "2024-04-01 08:30:00")])
+    result = pipeline.run(
+        spark,
+        trigger_origin="Scheduled",
+        job_mode="allTables",
+        lake_root=lake,
+        store=store,
+        source=LocalFileSource(inc2, clock=datetime(2024, 4, 2, 4, 0, 0)),
+    )
+    # touched partitions: 2024-03 (s3) and 2024-04 (s4, p4)
+    assert result.tables == {"retail_subscriptions": 2, "retail_plans": 1}
+    subs = _read_lake(spark, lake, "retail_subscriptions")
+    got = {r.id: r.status for r in subs.select("id", "status").collect()}
+    assert got == {
+        "s1": "cancelled", "s2": "active", "s3": "upgraded", "s4": "active"
+    }
+    assert subs.count() == 4
+    for t in TABLES:
+        assert store.get(t) == "2024-04-02 04:00:00"
+
 
 def test_incremental_rerun_is_idempotent(spark, tmp_path, initial_loaded, lake):
     """Crash-before-commit semantics: the same window re-extracts and

@@ -1,9 +1,9 @@
-"""Batch evaluation in both lake writers: the empty-batch skip, the
+"""Batch evaluation in the lake writer: the empty-batch skip, the
 NULL-id guard and the touched-partition set come from ONE pass over the
-batch. Covers the guards on both arms of the hive-path writer, the
-release of the broadcast arm's cached batch on every exit path
-(persistent-RDD count unchanged), and how many times each arm runs the
-batch's source (a Python UDF counting rows into an accumulator)."""
+batch. Covers the guards on both arms of the writer, the release of
+the broadcast arm's cached batch on every exit path (no persisted RDD
+left behind), and how many times each arm runs the batch's source (a
+Python UDF counting rows into an accumulator)."""
 
 from __future__ import annotations
 
@@ -15,15 +15,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from data_ingestor_gluejob_script_spark import pipeline, streaming
-from data_ingestor_gluejob_script_spark.pipeline import (
-    write_partitioned_upsert,
-    write_partitioned_upsert_bucketed,
-)
+from data_ingestor_gluejob_script_spark.pipeline import write_partitioned_upsert
 from data_ingestor_gluejob_script_spark.registry import CATALOG
 from data_ingestor_gluejob_script_spark.watermarks import WatermarkStore
 
 SUBS = CATALOG["retail_subscriptions"]
-TABLE = "t_batch_eval_lake"
 ARMS = pytest.mark.parametrize(
     "broadcast_batch", [True, False], ids=["broadcast", "sort_merge"]
 )
@@ -80,13 +76,6 @@ def lake(spark, tmp_path):
     root = str(tmp_path / "lake")
     write_partitioned_upsert(spark, _batch(spark, BASE), SUBS, root)
     return root
-
-
-@pytest.fixture()
-def clean_table(spark):
-    spark.sql(f"DROP TABLE IF EXISTS {TABLE}")
-    yield
-    spark.sql(f"DROP TABLE IF EXISTS {TABLE}")
 
 
 @ARMS
@@ -212,26 +201,3 @@ def test_hive_writer_batch_evaluations(spark, lake, broadcast_batch):
     else:
         assert len(DAY) <= acc.value <= 2 * len(DAY)
 
-
-def test_bucketed_writer_evaluates_broadcast_batch_once(spark, clean_table):
-    write_partitioned_upsert_bucketed(
-        spark, _batch(spark, BASE), SUBS, TABLE, num_buckets=4
-    )
-    batch, acc = _counted_batch(spark, DAY)
-    cached = _persisted(spark)
-    n = write_partitioned_upsert_bucketed(
-        spark, batch, SUBS, TABLE, num_buckets=4, broadcast_batch=True
-    )
-    assert n == 3  # the touched partitions hold s1, s3, s4
-    assert acc.value == len(DAY)
-    assert _persisted(spark) <= cached
-
-
-def test_bucketed_writer_empty_batch_skips(spark, clean_table):
-    cached = _persisted(spark)
-    n = write_partitioned_upsert_bucketed(
-        spark, _batch(spark, []), SUBS, TABLE, num_buckets=4
-    )
-    assert n == 0
-    assert not spark.catalog.tableExists(TABLE)
-    assert _persisted(spark) <= cached
