@@ -27,15 +27,16 @@ correctness:
 bench:
 	python bench.py
 
-# One traced ingest run (seed 1); prints the checks' outcome and the
-# writer's per-layer metrics (jobs, bytes and files written, write
+# One traced ingest run (seed 1); prints the checks' outcome, the
+# extract's per-layer metrics (construct and scan shares, rows, input
+# bytes per row) and the writer's (jobs, bytes and files written, write
 # amplification, ...).
 trace-ingest:
 	python3 perfbench/run.py --workload ingest --seed 1 --seconds 25 --trace 1 \
 	| tail -n 1 | python3 -c 'import json, sys; r = json.load(sys.stdin); \
 	print("failed", r["failed"], "of", r["attempted"]); \
 	[print(k, v["value"]) for k, v in sorted(r["metrics"].items()) \
-	 if k.startswith(("pipeline.upsert.", "pipeline.write_amp"))]'
+	 if k.startswith(("pipeline.extract.", "pipeline.upsert.", "pipeline.write_amp"))]'
 
 # One traced query run (seed 1); prints the checks' outcome and the
 # per-layer metrics of q_join_3hop and x_group_split (construct and

@@ -52,6 +52,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .operators.normalize import normalize_booleans
 from .operators.relational import semi_join, watermark_filter
@@ -170,7 +171,6 @@ def _prepare_batch(batch: DataFrame, spec: TableSpec) -> DataFrame:
 
 def _scope_existing(
     existing: DataFrame,
-    prepared: DataFrame,
     spec: TableSpec,
     ycol: str,
     mcol: str,
@@ -189,24 +189,33 @@ def _scope_existing(
     cross-company erasure. Both predicates push down as partition
     pruning.
 
-    Schema evolution: a registry column added AFTER these lake files
-    were written is absent from the merged scan — backfill it as a
-    typed NULL (type from the incoming batch) so historic rows survive
-    the upsert with NULL in the new column instead of failing the
-    select. Columns the lake has but the registry dropped are pruned
-    by the select, and age out as their partitions rewrite.
+    Schema evolution is settled by the read itself: the writer scans
+    the lake with the registry's columns typed as in the batch
+    (``_lake_schema``), so a column added AFTER these files were
+    written reads as a typed NULL and historic rows survive the upsert
+    with NULL in it, while columns the lake has but the registry
+    dropped are never read, and age out as their partitions rewrite.
     """
     pred = _partition_predicate(ycol, mcol, touched)
     if "company" in existing.columns:
         existing = existing.filter(F.col("company") == company)
-    existing = existing.filter(pred)  # pushed as partition pruning
-    batch_types = {f.name: f.dataType for f in prepared.schema.fields}
-    for c in spec.columns:
-        if c not in existing.columns:
-            existing = existing.withColumn(c, F.lit(None).cast(batch_types[c]))
     return (
-        existing.select(*spec.columns)  # drop partition/company cols
+        existing.filter(pred)  # pushed as partition pruning
+        .select(*spec.columns)  # drop partition/company cols
         .transform(lambda d: derive_partitions(d, spec.ts_col, spec.name))
+    )
+
+
+def _lake_schema(prepared: DataFrame, spec: TableSpec) -> T.StructType:
+    """The registry's columns, typed as in the prepared batch: the
+    schema the writer reads its lake with. The partition columns stay
+    out so partition discovery supplies them: declared here, a lake
+    without ``company=`` directories would read ``company`` as a NULL
+    data column, and the company filter would drop every row."""
+    types = {f.name: f.dataType for f in prepared.schema.fields}
+    parts = {"company", f"{spec.name}_year", f"{spec.name}_month"}
+    return T.StructType(
+        [T.StructField(c, types[c]) for c in spec.columns if c not in parts]
     )
 
 
@@ -316,13 +325,13 @@ def write_partitioned_upsert(
 
         ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
         root = lake_table_root(lake_root, spec.name)
-        existing = read_parquet_table(spark, root)
+        existing = read_parquet_table(spark, root, _lake_schema(prepared, spec))
         # ``touched`` (the batch's partitions plus the delete arm's)
         # drives both the lake pruning predicate and the compat rename
         # scope.
         if existing is not None:
             existing = _scope_existing(
-                existing, prepared, spec, ycol, mcol, touched, company
+                existing, spec, ycol, mcol, touched, company
             )
 
         emptied: list[tuple] = []

@@ -3,26 +3,74 @@
 Reference parity:
 - S1 CSV scan (gluejob.py:226-242): per-table separator, schema-driven
   column pruning (``usecols``), all-string coercion, missing file →
-  ``None`` + continue. Here: an explicit string schema on
-  ``spark.read.csv`` gives Catalyst the projection for free, and the
-  missing-source contract surfaces as ``None`` (caller skips, matching
-  gluejob.py:167-169).
+  ``None`` + continue. Here: the header record, read on the driver,
+  becomes an explicit string schema on ``spark.read.csv``, which gives
+  Catalyst the projection for free, and the missing-source contract
+  surfaces as ``None`` (caller skips, matching gluejob.py:167-169).
 - S2 parquet read-back of one lake partition (gluejob.py:207-224):
   ``NoSuchKey`` → ``None`` ("create empty").
 
-At scale both readers are plain distributed scans — no driver-side
-materialization anywhere.
+At scale both readers are plain distributed scans; the driver reads
+no more than a CSV's header record.
 """
 
 from __future__ import annotations
 
+import csv
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from ..registry import TableSpec
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` under the session's Hadoop
+    configuration (local, HDFS and s3a alike)."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _csv_header(spark: SparkSession, path: str, sep: str) -> list[str] | None:
+    """Column names of a CSV file's header record, as Spark's header
+    inference would name them, or ``None`` if the file does not exist.
+
+    One ``exists()`` and one ``open`` on the driver, no Spark job. The
+    record is parsed in the reader's dialect: ``sep``, ``"`` quoting,
+    doubled quotes, a leading UTF-8 BOM dropped, blank lines before it
+    skipped; a quoted name spanning several lines is read until its
+    quote closes. Names then get Spark's own clean-up
+    (``CSVUtils.makeSafeHeader``): an empty name becomes ``_c{i}`` and
+    each copy of a duplicated name (case-insensitively, unless
+    ``spark.sql.caseSensitive``) gets its index appended, so a
+    duplicated schema column reads as missing rather than ambiguous.
+    """
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return None
+    jio = spark._jvm.java.io
+    reader = jio.BufferedReader(jio.InputStreamReader(fs.open(p), "UTF-8"))
+    try:
+
+        def lines():
+            while (line := reader.readLine()) is not None:
+                yield line.removeprefix("\ufeff") + "\n"
+
+        records = csv.reader(lines(), delimiter=sep, quotechar='"', doublequote=True)
+        row = next((r for r in records if r), [])
+    finally:
+        reader.close()
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+    key = (lambda n: n) if case_sensitive else str.lower
+    counts = Counter(key(n) for n in row if n)
+    return [
+        f"_c{i}" if not n else f"{n}{i}" if counts[key(n)] > 1 else n
+        for i, n in enumerate(row)
+    ]
 
 
 def read_csv_table(spark: SparkSession, path: str, spec: TableSpec) -> DataFrame | None:
@@ -32,13 +80,15 @@ def read_csv_table(spark: SparkSession, path: str, spec: TableSpec) -> DataFrame
     the reference's ``usecols`` semantics (gluejob.py:234-236): a
     source file with reordered or extra columns maps correctly (extras
     dropped), and a missing schema column raises instead of silently
-    mis-assigning data. (An explicit ``.schema(...)`` on a headered CSV
-    would bind positionally — the hazard this avoids.) All columns stay
-    string-typed: with ``inferSchema`` off this is a single distributed
-    pass, and pruning still reaches the scan via the final select.
+    mis-assigning data. The header is read on the driver
+    (``_csv_header``) and handed to the scan as an all-string schema
+    in the FILE's own column order, so the positional binding of an
+    explicit schema is the by-name binding, and no schema-inference
+    job runs. Pruning reaches the scan via the final select.
 
-    A missing file returns ``None`` so the caller can log-and-continue
-    (gluejob.py:167-169,238-240).
+    ``path`` names one CSV file (the reference's layout: one object
+    per table). A missing file returns ``None`` so the caller can
+    log-and-continue (gluejob.py:167-169,238-240).
 
     Dialect matches pandas' (the reference parser): ``escape='"'`` for
     the doubled-quote convention (Spark's default escape is backslash)
@@ -49,15 +99,8 @@ def read_csv_table(spark: SparkSession, path: str, spec: TableSpec) -> DataFrame
     nothing is lost, and a huge multi-line CSV should be re-staged as
     parquet anyway.
     """
-    try:
-        df = spark.read.options(
-            sep=spec.csv_sep,
-            header=True,
-            escape='"',
-            multiLine=True,
-        ).csv(path)
-        header = set(df.columns)  # resolution forces a missing path to fail
-    except AnalysisException:
+    header = _csv_header(spark, path, spec.csv_sep)
+    if header is None:
         return None
     missing = [c for c in spec.columns if c not in header]
     if missing:
@@ -65,25 +108,43 @@ def read_csv_table(spark: SparkSession, path: str, spec: TableSpec) -> DataFrame
             f"{path} is missing schema columns {missing} "
             f"(header: {sorted(header)})"
         )
-    return df.select(*[F.col(c).cast("string").alias(c) for c in spec.columns])
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in header])
+    return (
+        spark.read.schema(schema)
+        .options(sep=spec.csv_sep, header=True, escape='"', multiLine=True)
+        .csv(path)
+        .select(*spec.columns)
+    )
 
 
-def read_parquet_table(spark: SparkSession, path: str) -> DataFrame | None:
-    """S2: read an existing lake partition; absent → None
-    (gluejob.py:207-224).
+def read_parquet_table(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """S2: read an existing lake table; absent (no such path, or no
+    data files under it) → None (gluejob.py:207-224).
 
-    ``mergeSchema`` because a long-lived lake holds files written under
+    ``schema`` — the data columns the caller needs, typed — makes the
+    read plan-only: partition discovery still supplies the partition
+    columns (leave them out of ``schema``), no footer is opened, and a
+    column that older files lack reads as a typed NULL while one the
+    schema omits is never read.
+
+    Without it the read merges every footer (``mergeSchema``, one
+    Spark job), because a long-lived lake holds files written under
     several schema generations: the default scan types the table from
     one footer, silently dropping columns that only newer (or older)
     files carry — merge instead, so every generation's columns surface
-    (absent values read as NULL, exactly the upsert writer's
-    schema-evolution contract)."""
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
-        df.schema
-    except AnalysisException:
+    (absent values read as NULL)."""
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
         return None
-    return df
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+        return df if len(df._jdf.inputFiles()) else None
+    try:
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    except AnalysisException:  # no data files to take a schema from
+        return None
 
 
 def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -19,3 +20,25 @@ def spark():
         extra_conf={"spark.sql.warehouse.dir": "/tmp/spark-warehouse-tests"},
     )
     yield s
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns its result and the number of Spark jobs it launched
+    (statusTracker)."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs_{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -207,19 +207,7 @@ def test_components_evaluate_edge_plan_once(spark, small_graph_edges):
     assert acc.value == len(edges)
 
 
-def _jobs_in(spark, group, fn):
-    """Run ``fn()`` under a fresh job group; return its result and the
-    number of Spark jobs it launched."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_group_split_job_counts_and_output(spark):
+def test_group_split_job_counts_and_output(spark, count_jobs):
     """x_group_split on sf0.01 keys on the component map directly. A
     warm pass launches at most 6 jobs to construct (the pair plan
     evaluated once by the components probe, no separate checkpoint
@@ -235,12 +223,9 @@ def test_group_split_job_counts_and_output(spark):
     fn = extras()["x_group_split"]
     got = fn(spark, sf).collect()  # warm: file listings, memoized loads
 
-    df, construct = _jobs_in(
-        spark, "x_group_split.construct", lambda: fn(spark, sf)
-    )
-    _, execute = _jobs_in(
-        spark, "x_group_split.execute",
-        lambda: df.write.format("noop").mode("overwrite").save(),
+    df, construct = count_jobs(lambda: fn(spark, sf))
+    _, execute = count_jobs(
+        lambda: df.write.format("noop").mode("overwrite").save()
     )
     assert construct <= 6
     assert execute <= 2

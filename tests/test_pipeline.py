@@ -567,9 +567,10 @@ def test_compaction_target_files_spreads_partitions(spark, tmp_path, lake):
 
 def test_upsert_schema_evolution_backfills_new_column(spark, tmp_path, lake):
     """A registry column added after the lake was first written: the
-    next upsert must read the old files (mergeSchema), backfill the new
-    column as typed NULL for historic rows, and carry real values for
-    the new batch — never fail the select or silently drop the column."""
+    next upsert must read the old files (through the registry's
+    columns), backfill the new column as typed NULL for historic rows,
+    and carry real values for the new batch — never fail the select or
+    silently drop the column."""
     from data_ingestor_gluejob_script_spark.pipeline import (
         write_partitioned_upsert,
     )
@@ -666,6 +667,125 @@ def test_compaction_preserves_evolved_schema(spark, tmp_path, lake):
     }
     assert set(got) == {"s1", "s2"}
     assert got["s1"].tier is None and got["s2"].tier == "gold"
+
+
+def test_upsert_prunes_column_the_registry_dropped(spark, tmp_path, lake):
+    """Lake files that carry a column the registry has since dropped
+    still upsert: the writer's schema-supplied read never reads that
+    column, the merge keeps the historic row, and the rewritten
+    partition no longer carries it."""
+    from data_ingestor_gluejob_script_spark.pipeline import (
+        write_partitioned_upsert,
+    )
+    from data_ingestor_gluejob_script_spark.registry import TableSpec
+
+    cols = ("id", "status", "created_at", "updated_at")
+    v1 = TableSpec("retail_subscriptions", cols + ("tier",))
+    v2 = TableSpec("retail_subscriptions", cols)
+    base = {
+        "status": "active",
+        "created_at": "2024-01-10 10:00:00",
+        "updated_at": "2024-01-10 10:00:00",
+    }
+
+    def df_for(spec, rows):
+        return spark.createDataFrame(
+            [[r[c] for c in spec.columns] for r in rows], list(spec.columns)
+        )
+
+    write_partitioned_upsert(
+        spark, df_for(v1, [dict(base, id="s1", tier="gold")]), v1, lake
+    )
+    assert write_partitioned_upsert(
+        spark, df_for(v2, [dict(base, id="s2")]), v2, lake
+    ) == 2
+
+    root = f"{lake}/raw/locaweb/retail_subscriptions"
+    got = spark.read.option("mergeSchema", "true").parquet(root)
+    assert "tier" not in got.columns
+    assert {(r.id, r.status) for r in got.collect()} == {
+        ("s1", "active"), ("s2", "active")
+    }
+
+
+def test_upsert_keeps_rows_of_lake_without_company_level(
+    spark, tmp_path, lake
+):
+    """A lake table laid out as ``{t}_year=/{t}_month=`` with no
+    ``company=`` level keeps its rows through an upsert: partition
+    discovery finds no company column, so no company filter applies,
+    and the merged partition lands under ``company=``. (Read as a data
+    column, ``company`` would be NULL and the filter would drop every
+    existing row.)"""
+    from data_ingestor_gluejob_script_spark.pipeline import (
+        lake_table_root,
+        write_partitioned_upsert,
+    )
+
+    spec = SUBS
+    ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
+    root = lake_table_root(lake, spec.name)
+    old = _sub("s1", "2024-01-10 10:00:00", "2024-01-10 10:00:00")
+    spark.createDataFrame(
+        [[old[c] for c in spec.columns] + [2024, 1]],
+        list(spec.columns) + [ycol, mcol],
+    ).write.partitionBy(ycol, mcol).parquet(root)
+
+    new = _sub("s2", "2024-01-20 10:00:00", "2024-01-20 10:00:00")
+    batch = spark.createDataFrame(
+        [[new[c] for c in spec.columns]], list(spec.columns)
+    )
+    assert write_partitioned_upsert(spark, batch, spec, lake) == 2
+    got = spark.read.parquet(f"{root}/company=Locaweb")
+    assert {r.id for r in got.collect()} == {"s1", "s2"}
+
+
+def test_scheduled_day_job_count(spark, tmp_path, lake, count_jobs):
+    """A warm Scheduled day of retail_provisionings — the 3-hop chain
+    extract over four CSVs, the touched-partition merge and the
+    watermark commit — launches 9 Spark jobs. None of them discovers a
+    schema: the CSV headers are read on the driver and the lake read
+    takes the writer's schema (header inference and the lake's footer
+    merge cost 5 more)."""
+    src = str(tmp_path / "src" / "corleone")
+    created = "2024-01-10 10:00:00"
+    fresh = "2024-02-15 10:00:00"  # past the default watermark
+    for spec, rows in [
+        (SUBS, [_sub("s1", created, fresh), _sub("s2", created, created)]),
+        (PLANS, [_plan("pl1", "s1", created), _plan("pl2", "s2", created)]),
+        (CATALOG["retail_items"], [
+            _row(CATALOG["retail_items"], id="it1", retail_plan_id="pl1"),
+            _row(CATALOG["retail_items"], id="it2", retail_plan_id="pl2"),
+        ]),
+        (CATALOG["retail_provisionings"], [
+            _row(CATALOG["retail_provisionings"], id=f"pr{i}",
+                 retail_item_id=item, created_at=f"2024-0{m}-05 08:00:00")
+            for i, (item, m) in enumerate(
+                [("it1", 1), ("it1", 2), ("it2", 1)]
+            )
+        ]),
+    ]:
+        _write_csv(src, spec, rows)
+    table = ["retail_provisionings"]
+    now = datetime(2024, 2, 10)
+    pipeline.run(
+        spark, "OnDemand", table[0], lake,
+        WatermarkStore(str(tmp_path / "wm_load.json"), table, now=now),
+        source_root=str(tmp_path / "src"),
+    )
+
+    def day(i):
+        return pipeline.run(
+            spark, "Scheduled", table[0], lake,
+            WatermarkStore(str(tmp_path / f"wm{i}.json"), table, now=now),
+            source=LocalFileSource(src, clock=datetime(2024, 3, 1)),
+        )
+
+    day(0)  # warm: first-use planning and file listings
+    result, jobs = count_jobs(lambda: day(1))
+    # pr0 and pr1 qualify through s1; the merge rewrites both months
+    assert result.tables == {"retail_provisionings": 3}
+    assert jobs == 9
 
 
 def test_forget_rows_partition_scoped_erasure(spark, tmp_path, lake):

@@ -1,13 +1,22 @@
 """Source contract tests: missing CSV → None (gluejob.py:238-240),
 by-name column mapping under reordered/extra columns, missing schema
-column → error, JDBC SQL generation + watermark validation."""
+column → error, the driver-read CSV header against Spark's own header
+inference, the lake reader's missing-root and schema contracts, JDBC
+SQL generation + watermark validation."""
 
 from __future__ import annotations
 
 import pytest
 
-from data_ingestor_gluejob_script_spark.registry import spec
-from data_ingestor_gluejob_script_spark.sources.files import read_csv_table
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
+
+from data_ingestor_gluejob_script_spark.registry import TableSpec, spec
+from data_ingestor_gluejob_script_spark.sources.files import (
+    _csv_header,
+    read_csv_table,
+    read_parquet_table,
+)
 from data_ingestor_gluejob_script_spark.sources.jdbc import (
     bounds_probe_sql,
     incremental_sql,
@@ -25,11 +34,116 @@ def _write_csv(path, header, rows, sep=";"):
             f.write(sep.join(r) + "\n")
 
 
-def test_missing_csv_returns_none(spark, tmp_path):
-    assert read_csv_table(spark, str(tmp_path / "nope.csv"), ORDERS) is None
+def test_missing_csv_returns_none(spark, tmp_path, count_jobs, monkeypatch):
+    """A missing CSV is found by one Hadoop-FS ``exists()``: no Spark
+    job, and no ``spark.read`` whose PATH_NOT_FOUND would log Java
+    stack traces for an expected, handled case."""
+    monkeypatch.setattr(
+        SparkSession, "read", property(lambda _: pytest.fail("spark.read used"))
+    )
+    out, jobs = count_jobs(
+        lambda: read_csv_table(spark, str(tmp_path / "nope.csv"), ORDERS)
+    )
+    assert out is None
+    assert jobs == 0
 
 
-def test_reordered_and_extra_columns_map_by_name(spark, tmp_path):
+# Each header holds ``id`` and ``status`` (row values "1" and "ok")
+# among other names, written in one of the dialect's corner cases.
+HEADER_CASES = {
+    "reordered_extra": "extra;status;other;id\nE;ok;O;1\n",
+    "quoted_name_with_sep": 'id;"a;b";status\n1;x;ok\n',
+    "doubled_quote_in_name": 'id;"say ""hi""";status\n1;x;ok\n',
+    "utf8_bom": "\ufeffid;status\n1;ok\n",
+    "utf8_bom_quoted": '\ufeff"id";status\n1;ok\n',
+    "name_quoted_across_lines": 'id;"two\nlines";status\n1;x;ok\n',
+    "crlf": "status;id\r\nok;1\r\n",
+    "blank_lines_first": "\n\nid;status\n1;ok\n",
+    "empty_names": 'id;;status;""\n1;x;ok;y\n',
+    "retail_orders_multiline": (
+        ";".join(ORDERS.columns)
+        + "\n"
+        + ";".join(
+            '"<a x=""q"">l1\nl2</a>"' if c == "checkout_order_xml"
+            else {"id": "1", "status": "ok"}.get(c, f"v_{c}")
+            for c in ORDERS.columns
+        )
+        + "\n"
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_driver_header_matches_spark_inference(spark, tmp_path, case):
+    """The header the driver parses names the columns exactly as
+    Spark's header inference (the reader's previous, job-launching
+    path) does, and the scan bound to it positionally skips the
+    header record and puts each value under its own name."""
+    path = str(tmp_path / f"{case}.csv")
+    with open(path, "wb") as f:
+        f.write(HEADER_CASES[case].encode("utf-8"))
+    oracle = (
+        spark.read.options(header=True, sep=";", escape='"', multiLine=True)
+        .csv(path)
+        .columns
+    )
+    assert _csv_header(spark, path, ";") == oracle
+    out = read_csv_table(spark, path, TableSpec("t", ("status", "id")))
+    assert [tuple(r) for r in out.collect()] == [("ok", "1")]
+
+
+def test_header_only_csv_reads_no_rows(spark, tmp_path):
+    path = str(tmp_path / "retail_orders.csv")
+    _write_csv(path, list(reversed(ORDERS.columns)), [])
+    out = read_csv_table(spark, path, ORDERS)
+    assert out.columns == list(ORDERS.columns)
+    assert out.count() == 0
+
+
+@pytest.mark.parametrize("dup", ["status", "STATUS"])
+def test_duplicate_header_name_raises(spark, tmp_path, dup):
+    """A schema column named twice (case-insensitively, like Spark)
+    is an error, as under header inference, which renames each copy —
+    not an ambiguous reference at the select."""
+    path = str(tmp_path / "retail_orders.csv")
+    _write_csv(path, list(ORDERS.columns) + [dup], [])
+    with pytest.raises(ValueError, match="missing schema columns.*status"):
+        read_csv_table(spark, path, ORDERS)
+
+
+def test_lake_reader_contract(spark, tmp_path, count_jobs):
+    """``read_parquet_table``: a missing or file-less root is ``None``
+    with or without a schema. Given a schema, the read launches no job
+    and partition discovery still adds the partition columns; a schema
+    column the files lack reads as a typed NULL and a file column the
+    schema omits is not read. Without one, the footer merge costs a
+    job."""
+    assert read_parquet_table(spark, str(tmp_path / "nope")) is None
+    empty = tmp_path / "empty" / "company=X"
+    empty.mkdir(parents=True)
+    assert read_parquet_table(spark, str(empty.parent)) is None
+
+    root = str(tmp_path / "lake")
+    spark.createDataFrame(
+        [("1", "x", 2024, 1)], "id string, old string, y int, m int"
+    ).write.partitionBy("y", "m").parquet(root)
+    schema = T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("new", T.LongType())]
+    )
+    assert read_parquet_table(spark, str(tmp_path / "nope"), schema) is None
+    assert read_parquet_table(spark, str(empty.parent), schema) is None
+    df, jobs = count_jobs(lambda: read_parquet_table(spark, root, schema))
+    assert jobs == 0
+    assert df.dtypes == [
+        ("id", "string"), ("new", "bigint"), ("y", "int"), ("m", "int")
+    ]
+    assert [tuple(r) for r in df.collect()] == [("1", None, 2024, 1)]
+    merged, jobs = count_jobs(lambda: read_parquet_table(spark, root))
+    assert merged.columns == ["id", "old", "y", "m"]
+    assert jobs == 1
+
+
+def test_reordered_and_extra_columns_map_by_name(spark, tmp_path, count_jobs):
     # Header order differs from the schema and has an extra column —
     # values must land under the right names (gluejob.py:234-236
     # usecols semantics, NOT positional).
@@ -41,7 +155,8 @@ def test_reordered_and_extra_columns_map_by_name(spark, tmp_path):
         f"v_{c}" for c in ORDERS.columns if c not in ("id", "status")
     ]
     _write_csv(path, header, [row])
-    out = read_csv_table(spark, path, ORDERS)
+    out, jobs = count_jobs(lambda: read_csv_table(spark, path, ORDERS))
+    assert jobs == 0  # the header is read on the driver
     assert out.columns == list(ORDERS.columns)
     got = out.collect()[0]
     assert got.id == "42" and got.status == "ok"
@@ -83,8 +198,6 @@ def test_incremental_sql_uses_anchor_wm_col_not_childs():
     resolved from the anchor's registry entry — a chained spec whose
     own wm_col differs must not leak it into the WHERE clause (it may
     not even exist on the anchor)."""
-    from data_ingestor_gluejob_script_spark.registry import TableSpec
-
     odd = TableSpec(
         "odd_child",
         ("id", "retail_subscription_id", "created_at", "updated_at"),
