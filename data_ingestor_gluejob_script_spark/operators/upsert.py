@@ -120,10 +120,17 @@ def merge_upsert(
       side, conforming it to the lake's bucket count.
       ``existing_unique=True`` is the asymmetric middle: the incoming
       batch still gets its window (a re-extraction can carry duplicate
-      ids) but the lake side skips its own — the shape
-      pipeline.write_partitioned_upsert runs, where the scoped lake
-      read is unique per key by this writer's own contract and must
-      not pay a window shuffle per daily batch.
+      ids) but the lake side skips its own — the scoped lake read of
+      pipeline.write_partitioned_upsert is unique per key by that
+      writer's own contract. The writer also drives ``dedup_within``
+      from its input: where the batch's evaluation pass proved the ids
+      unique (a daily increment almost always is) it passes False and
+      the broadcast arm runs no shuffle at all; a batch that does
+      carry a duplicate id keeps the window.
+    - The anti join's key side is always ``incoming``'s id columns,
+      never the windowed frame: the key set is the same, so the window
+      (when it runs) shuffles once, and the sort-merge arm's key side
+      shuffles only the ids.
     - ``keys_nullable=False`` is the PK contract: the anti join uses
       plain equality instead of null-safe equality. This matters for
       the bucketed arm specifically — Spark partitions a null-safe
@@ -154,11 +161,14 @@ def merge_upsert(
         if dedup_within and not existing_unique
         else existing
     )
-    # No dedup needed on the keys projection: inc is unique per key
-    # here — either the window just made it so, or dedup_within=False
-    # is the caller asserting it (and anti join tolerates dup build
-    # rows anyway; uniqueness only keeps the broadcast minimal).
-    keys = inc.select(*[F.col(c).alias(f"_mk_{c}") for c in id_cols])
+    # The keys come from the batch itself, not from the windowed
+    # ``inc``: a left anti join ignores duplicate build rows and the
+    # key set is the same (the window keeps one row per key, the NULL
+    # key included), so the keys side never re-runs the window's
+    # shuffle — an inferred isnotnull(id) on this side would stop
+    # Spark reusing ``inc``'s exchange — and under sort-merge only the
+    # id column shuffles.
+    keys = incoming.select(*[F.col(c).alias(f"_mk_{c}") for c in id_cols])
     # The flag is a size declaration, so make the plan deterministic
     # both ways: True forces the broadcast, False forbids it (without
     # the merge hint Spark would auto-broadcast a small keys side and

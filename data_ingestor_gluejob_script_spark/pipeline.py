@@ -37,7 +37,10 @@ carrying an Observation.
 
 - daily increments (``broadcast_batch=True``): that write also fills
   a persisted copy of the batch, and the merge reads the cache, so the
-  source runs ONCE per table;
+  source runs ONCE per table. The Observation also counts the batch's
+  distinct ids (a set no bigger than the broadcast key side); when
+  they equal its rows the upsert window is the identity and is
+  skipped, so a duplicate-free increment merges with no shuffle;
 - initial loads and backfills (``broadcast_batch=False``): nothing is
   pinned, and the merge evaluates the source again — TWICE per table.
 """
@@ -100,10 +103,14 @@ def _evaluated_batch(
     """Evaluate the prepared batch once, with one ``noop`` write
     carrying an Observation, for everything the lake writer must
     know before the merge: its row count (the empty-batch skip), its
-    NULL-id count (the PK guard) and the (year, month) partitions it
-    touches. Yields ``(prepared, touched, batch_touched, n_rows)``,
-    where ``touched`` additionally covers the CDC delete arm's victim
-    partitions. With ``broadcast_batch`` the batch is persisted, and
+    NULL-id count (the PK guard), the (year, month) partitions it
+    touches and, with ``broadcast_batch``, whether its ids are unique
+    (the merge then skips its within-batch dedup window). Yields
+    ``(prepared, touched, batch_touched, n_rows, unique_ids)``, where
+    ``touched`` additionally covers the CDC delete arm's victim
+    partitions; ``unique_ids`` is always False without
+    ``broadcast_batch``, whose batch is too big for an id set on the
+    driver. With ``broadcast_batch`` the batch is persisted, and
     the cache is released on every exit — guard raise, empty return,
     failed write — because the streaming sink calls the writer once
     per micro-batch.
@@ -120,23 +127,30 @@ def _evaluated_batch(
         prepared = prepared.persist()
     try:
         obs = Observation(f"batch_{spec.name}")
+        metrics = [
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col(spec.id_col).isNull()).alias("null_ids"),
+            F.collect_set(F.struct(ycol, mcol)).alias("parts"),
+        ]
+        if broadcast_batch:
+            # An Observation rejects count(DISTINCT …); the id set is
+            # no bigger than the key side this arm broadcasts anyway.
+            metrics.append(
+                F.size(F.collect_set(spec.id_col)).alias("distinct_ids")
+            )
         (
             # Only the three observed columns: unpinned, the source
             # prunes the rest; persisted, the scan still fills the
             # whole cache.
             prepared.select(spec.id_col, ycol, mcol)
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col(spec.id_col).isNull()).alias("null_ids"),
-                F.collect_set(F.struct(ycol, mcol)).alias("parts"),
-            )
+            .observe(obs, *metrics)
             .write.format("noop")
             .mode("overwrite")
             .save()
         )
         stats = obs.get
         n_rows, null_ids = stats["n"], stats["null_ids"]
+        unique_ids = broadcast_batch and stats["distinct_ids"] == n_rows
         batch_touched = [(p[0], p[1]) for p in stats["parts"]]
         if null_ids:
             raise ValueError(
@@ -150,7 +164,7 @@ def _evaluated_batch(
         for part in delete_touched or []:
             if part not in touched:
                 touched.append(part)
-        yield prepared, touched, batch_touched, int(n_rows)
+        yield prepared, touched, batch_touched, int(n_rows), unique_ids
     finally:
         if broadcast_batch:
             prepared.unpersist()
@@ -278,11 +292,15 @@ def write_partitioned_upsert(
 
     Batch evaluation: the empty-batch skip, the NULL-id guard and the
     touched (year, month) set come from one pass over the batch
-    (``_evaluated_batch``): a ``noop`` write carrying an Observation.
-    With ``broadcast_batch`` the batch is persisted, that write fills
-    the cache and the merge reads it, so the source is evaluated once
-    (the cache is released on every exit); without it nothing is
-    pinned and the merge evaluates the source a second time.
+    (``_evaluated_batch``): a ``noop`` write carrying an Observation,
+    logged as one INFO line. With ``broadcast_batch`` the batch is
+    persisted, that write fills the cache and the merge reads it, so
+    the source is evaluated once (the cache is released on every
+    exit); the same pass also tells whether the batch's ids are unique,
+    and if they are the merge skips its within-batch dedup window
+    (``dedup_within=False``) and runs no shuffle. Without
+    ``broadcast_batch`` nothing is pinned, the merge evaluates the
+    source a second time, and the window always runs.
 
     Returns the number of rows written (0 = empty batch skipped, the
     F2 guard at gluejob.py:175-179). Mirrors posting_parquets_in_s3 +
@@ -313,6 +331,7 @@ def write_partitioned_upsert(
         touched,
         batch_touched,
         n_rows,
+        unique_ids,
     ):
         if n_rows == 0:
             if delete_keys is not None:
@@ -322,6 +341,13 @@ def write_partitioned_upsert(
                 )
             log.info("skip empty batch for %s", spec.name)
             return 0
+        log.info(
+            "%s batch: %d rows, %d partitions touched, dedup window %s",
+            spec.name,
+            n_rows,
+            len(touched),
+            "skipped (ids unique)" if unique_ids else "runs",
+        )
 
         ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
         root = lake_table_root(lake_root, spec.name)
@@ -342,9 +368,10 @@ def write_partitioned_upsert(
                     "supported with single_object_compat (the rename "
                     "scope and emptied-dir removal would conflict)"
                 )
+            # No distinct: a left anti join ignores duplicate keys.
             key = delete_keys.select(
                 F.col(delete_keys.columns[0]).alias(spec.id_col)
-            ).distinct()
+            )
             existing = existing.join(
                 F.broadcast(key), spec.id_col, "left_anti"
             )
@@ -367,13 +394,21 @@ def write_partitioned_upsert(
                 }
                 emptied = [p for p in at_risk if p not in kept]
 
+        # With unique ids the within-batch dedup window is the
+        # identity, so it is skipped: a daily increment then merges
+        # without a shuffle.
         if existing is None:
-            merged = upsert_dedup(prepared, None, spec.id_col)  # O6+O7
+            merged = (
+                prepared
+                if unique_ids
+                else upsert_dedup(prepared, None, spec.id_col)  # O6+O7
+            )
         else:
             merged = merge_upsert(  # O6+O7, join-formulated (r13)
                 prepared,
                 existing,
                 spec.id_col,
+                dedup_within=not unique_ids,
                 existing_unique=True,
                 broadcast_incoming=broadcast_batch,
                 # PK contract: ids are guarded non-null on every write
@@ -388,8 +423,9 @@ def write_partitioned_upsert(
             )
         # Row count via an Observation on the write itself: a separate
         # .count() would execute the full merge plan (the incoming-side
-        # window dedup + broadcast/sort-merge anti join against the
-        # pruned lake scan + union) a second time just for the number.
+        # window dedup, if it runs + broadcast/sort-merge anti join
+        # against the pruned lake scan + union) a second time just for
+        # the number.
         obs = Observation(f"upsert_{spec.name}")
         out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
             "company", F.lit(company)
@@ -963,7 +999,6 @@ def apply_cdc_batch(
         # overlapping partitions (r9 steady-state CDC cost, PLANS.md).
         n_del = 0
         delete_touched: list[tuple] = []
-        del_keys = None
         lake = read_parquet_table(
             spark, lake_table_root(lake_root, spec.name)
         )
@@ -972,10 +1007,11 @@ def apply_cdc_batch(
         # row); the rare all-D-rows-lost batch just runs an empty
         # victims aggregation, same result as the old limit(1) probe.
         if lake is not None and stats["n_raw_deletes"] > 0:
-            del_keys = deletes.distinct()
+            # ``deletes`` holds one row per id (the last-change
+            # window), so it broadcasts as is.
             victims = (
                 lake.filter(F.col("company") == company)
-                .join(F.broadcast(del_keys), spec.id_col, "left_semi")
+                .join(F.broadcast(deletes), spec.id_col, "left_semi")
                 .groupBy(ycol, mcol)
                 .agg(F.count("*").alias("n"))
                 .collect()
@@ -988,7 +1024,7 @@ def apply_cdc_batch(
             spec,
             lake_root,
             company=company,
-            delete_keys=del_keys if delete_touched else None,
+            delete_keys=deletes if delete_touched else None,
             delete_touched=delete_touched,
         )
         return n_up, n_del

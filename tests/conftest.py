@@ -42,3 +42,34 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture()
+def write_plan(spark):
+    """``write_plan(fn)`` runs ``fn()`` and returns its result and the
+    final (adaptive) physical plan of the last file write it ran, read
+    from the SQL status store, which Spark keeps with the UI off."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def run(fn):
+        tag = f"write_plan_{next(_JOB_GROUPS)}"
+        sc.setJobDescription(tag)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.job.description", None)
+        # The store is filled by a listener: wait until it has seen
+        # the write's final plan.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        recent = store.executionsList(max(0, n - 20), 20)
+        plans = [
+            e.physicalPlanDescription()
+            for e in (recent.apply(i) for i in range(recent.size()))
+            if e.description() == tag
+            and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+        ]
+        return out, plans[-1]
+
+    return run

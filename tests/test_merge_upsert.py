@@ -96,6 +96,28 @@ def test_merge_upsert_skip_windows_when_unique(spark):
     assert "Window" not in _plan(out)
 
 
+def test_broadcast_arm_dedup_window_is_the_only_shuffle(spark):
+    """The writer's shape for a batch with duplicate ids (broadcast,
+    plain-equality keys, a unique lake): the anti join's keys come from
+    the batch itself, so the batch's dedup window is the one hash
+    Exchange. Built from the windowed frame, the keys side carried an
+    inferred isnotnull(k) that kept Spark from reusing the window's
+    exchange, and the plan held two."""
+    inc = spark.createDataFrame(
+        [r for r in INCOMING if r[0] is not None], SCHEMA
+    )
+    # a lake this writer made: no duplicate and no NULL key
+    ex = spark.createDataFrame(
+        [r for r in EXISTING if r[0] is not None and r != (3, "ex", 4.0)],
+        SCHEMA,
+    )
+    out = merge_upsert(
+        inc, ex, "k", existing_unique=True, keys_nullable=False
+    )
+    assert _n_shuffles(_plan(out)) == 1
+    assert _rows(out) == _rows(upsert_dedup(inc, ex, "k"))
+
+
 def test_broadcast_arm_never_shuffles_existing(spark):
     """Daily-increment shape: with the incoming keys broadcast and the
     lake already unique per key, the lake branch is scan→anti-join→

@@ -743,10 +743,13 @@ def test_upsert_keeps_rows_of_lake_without_company_level(
 def test_scheduled_day_job_count(spark, tmp_path, lake, count_jobs):
     """A warm Scheduled day of retail_provisionings — the 3-hop chain
     extract over four CSVs, the touched-partition merge and the
-    watermark commit — launches 9 Spark jobs. None of them discovers a
+    watermark commit — launches 7 Spark jobs. None of them discovers a
     schema: the CSV headers are read on the driver and the lake read
     takes the writer's schema (header inference and the lake's footer
-    merge cost 5 more)."""
+    merge cost 5 more). None of them shuffles the batch either: its
+    evaluation pass finds the ids unique, so the merge skips the dedup
+    window, and the anti join takes its keys from the batch (the
+    window's shuffle and its copy on the keys side cost 2 more)."""
     src = str(tmp_path / "src" / "corleone")
     created = "2024-01-10 10:00:00"
     fresh = "2024-02-15 10:00:00"  # past the default watermark
@@ -785,7 +788,31 @@ def test_scheduled_day_job_count(spark, tmp_path, lake, count_jobs):
     result, jobs = count_jobs(lambda: day(1))
     # pr0 and pr1 qualify through s1; the merge rewrites both months
     assert result.tables == {"retail_provisionings": 3}
-    assert jobs == 9
+    assert jobs == 7
+
+
+def test_initial_load_windows_dup_id_csv(spark, tmp_path, lake, write_plan):
+    """The sort-merge arm (initial load, backfills) observes no id set,
+    so it keeps the dedup window: a CSV with a duplicate id lands as
+    one row, the lowest value winning the tie ("archived" <
+    "canceled"), into an empty lake and over an existing one."""
+    src = str(tmp_path / "src")
+    _write_csv(f"{src}/corleone", SUBS, [
+        _sub("s1", "2024-01-10 10:00:00", "2024-01-10 10:00:00", "canceled"),
+        _sub("s1", "2024-01-10 10:00:00", "2024-01-10 10:00:00", "archived"),
+        _sub("s2", "2024-02-05 09:30:00", "2024-02-05 09:30:00"),
+    ])
+    for _ in range(2):  # no lake yet, then the merge over the first load
+        result, plan = write_plan(lambda: pipeline.initial_load(
+            spark, src, lake, [SUBS.name]
+        ))
+        assert result.tables == {SUBS.name: 2}
+        assert "Window" in plan
+        got = {
+            r.id: r.status
+            for r in _read_lake(spark, lake, SUBS.name).collect()
+        }
+        assert got == {"s1": "archived", "s2": "active"}
 
 
 def test_forget_rows_partition_scoped_erasure(spark, tmp_path, lake):
@@ -1100,6 +1127,96 @@ def test_apply_cdc_batch_fused_cross_partition_delete(spark, tmp_path, lake):
     assert {
         f: os.path.getmtime(f"{mar_dir}/{f}") for f in os.listdir(mar_dir)
     } == mar_files
+
+
+def _cdc_lake(spark, tmp_path, name) -> str:
+    """A fresh lake holding s0, s1 (Jan), f0 (Feb) and m0 (Mar)."""
+    from data_ingestor_gluejob_script_spark.pipeline import (
+        write_partitioned_upsert,
+    )
+
+    lake = str(tmp_path / name)
+    base = [
+        _sub("s0", "2024-01-10 10:00:00", "2024-01-10 10:00:00"),
+        _sub("s1", "2024-01-11 10:00:00", "2024-01-11 10:00:00"),
+        _sub("f0", "2024-02-10 10:00:00", "2024-02-10 10:00:00"),
+        _sub("m0", "2024-03-10 10:00:00", "2024-03-10 10:00:00"),
+    ]
+    write_partitioned_upsert(spark, spark.createDataFrame(
+        [[r[c] for c in SUBS.columns] for r in base], list(SUBS.columns)
+    ), SUBS, lake)
+    return lake
+
+
+def _cdc_changes(spark, changes):
+    """A CDC batch of ``(id, created, updated, op[, status])`` rows."""
+    cols = list(SUBS.columns) + ["_op"]
+    rows = [
+        dict(_sub(id, created, updated, *status), _op=op)
+        for id, created, updated, op, *status in changes
+    ]
+    return spark.createDataFrame([[r[c] for c in cols] for r in rows], cols)
+
+
+def _cdc_case(spark, tmp_path, name, changes):
+    """The counts and the lake's ``{id: status}`` after ``changes``
+    are applied to a fresh ``_cdc_lake``."""
+    from data_ingestor_gluejob_script_spark.pipeline import apply_cdc_batch
+
+    lake = _cdc_lake(spark, tmp_path, name)
+    counts = apply_cdc_batch(spark, _cdc_changes(spark, changes), SUBS, lake)
+    got = {r.id: r.status for r in _read_lake(spark, lake, SUBS.name).collect()}
+    return counts, got
+
+
+# s0 updated in Jan; s1 (Jan) and f0 (Feb, which empties) deleted
+CDC_DAY = [
+    ("s0", "2024-01-10 10:00:00", "2024-01-12 00:00:00", "U", "cancelled"),
+    ("s1", "2024-01-11 10:00:00", "2024-01-12 00:00:00", "D"),
+    ("f0", "2024-02-10 10:00:00", "2024-02-12 00:00:00", "D"),
+]
+
+
+@pytest.mark.parametrize("upsert", [True, False], ids=["fused", "erasure"])
+def test_apply_cdc_batch_double_delete_matches_single(
+    spark, tmp_path, upsert
+):
+    """An id deleted twice in one batch — at a later watermark (s1) or
+    at the same one (f0) — erases exactly as one delete does, on the
+    fused rewrite and on the pure-erasure route alike: the last-change
+    window leaves one delete per id, so the delete keys need no
+    distinct before their broadcast joins."""
+    once = CDC_DAY if upsert else CDC_DAY[1:]
+    twice = once + [
+        ("s1", "2024-01-11 10:00:00", "2024-01-13 00:00:00", "D"),
+        ("f0", "2024-02-10 10:00:00", "2024-02-12 00:00:00", "D"),
+    ]
+    want = _cdc_case(spark, tmp_path, "once", once)
+    assert want == (
+        ((1, 2), {"s0": "cancelled", "m0": "active"})
+        if upsert
+        else ((0, 2), {"s0": "active", "m0": "active"})
+    )
+    assert _cdc_case(spark, tmp_path, "twice", twice) == want
+
+
+def test_fused_cdc_batch_job_count(spark, tmp_path, count_jobs):
+    """One warm fused CDC batch — an update, a delete in the updated
+    partition and one that empties another — launches 21 Spark jobs.
+    The delete keys and the persisted upserts both come out of the
+    last-change window hash-partitioned on the id, so a distinct over
+    the keys or the merge's dedup window would add no exchange and no
+    job: dropping them saves operators, not jobs."""
+    from data_ingestor_gluejob_script_spark.pipeline import apply_cdc_batch
+
+    _cdc_case(spark, tmp_path, "warm", CDC_DAY)
+    lake = _cdc_lake(spark, tmp_path, "day")
+    cdf = _cdc_changes(spark, CDC_DAY)
+    counts, jobs = count_jobs(
+        lambda: apply_cdc_batch(spark, cdf, SUBS, lake)
+    )
+    assert counts == (1, 2)
+    assert jobs == 21
 
 
 def test_upsert_is_company_scoped_on_multi_company_lake(

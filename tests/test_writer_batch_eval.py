@@ -7,6 +7,7 @@ Python UDF counting rows into an accumulator)."""
 
 from __future__ import annotations
 
+import logging
 import os
 from datetime import datetime
 
@@ -15,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from data_ingestor_gluejob_script_spark import pipeline, streaming
+from data_ingestor_gluejob_script_spark.operators.upsert import upsert_dedup
 from data_ingestor_gluejob_script_spark.pipeline import write_partitioned_upsert
 from data_ingestor_gluejob_script_spark.registry import CATALOG
 from data_ingestor_gluejob_script_spark.watermarks import WatermarkStore
@@ -201,3 +203,50 @@ def test_hive_writer_batch_evaluations(spark, lake, broadcast_batch):
     else:
         assert len(DAY) <= acc.value <= 2 * len(DAY)
 
+
+def _shuffles(plan: str) -> list[str]:
+    """The hash/range Exchange node lines of a formatted plan
+    (BroadcastExchange excluded)."""
+    return [
+        ln for ln in plan.splitlines()
+        if "Exchange (" in ln and "BroadcastExchange" not in ln
+    ]
+
+
+@pytest.mark.parametrize("dup", [False, True], ids=["unique_ids", "dup_id"])
+def test_broadcast_merge_windows_only_dup_id_batch(
+    spark, lake, write_plan, caplog, dup
+):
+    """The broadcast arm's evaluation pass proves a batch's ids unique,
+    and its merge then runs no dedup window and no shuffle at all; a
+    batch with a duplicate id keeps the window. The writer logs which
+    one ran. Either way the lake holds upsert_dedup's rows: the batch
+    beats the lake, and the lowest value wins a tie inside the batch
+    ("archived" < "canceled")."""
+    rows = DAY + [_row("s1", "2024-01-10 10:00:00", "archived")] * dup
+    with caplog.at_level(logging.INFO, logger=pipeline.__name__):
+        n, plan = write_plan(lambda: write_partitioned_upsert(
+            spark, _batch(spark, rows), SUBS, lake
+        ))
+    assert n == 3
+    assert (
+        f"{SUBS.name} batch: {len(rows)} rows, 3 partitions touched, "
+        f"dedup window {'runs' if dup else 'skipped (ids unique)'}"
+    ) in caplog.messages
+    assert ("Window" in plan) == dup
+    if not dup:
+        assert _shuffles(plan) == []
+    want = {
+        r.id: r.status
+        for r in upsert_dedup(
+            _batch(spark, rows), _batch(spark, BASE), "id"
+        ).collect()
+    }
+    got = {
+        r.id: r.status
+        for r in spark.read.parquet(
+            pipeline.lake_table_root(lake, SUBS.name)
+        ).collect()
+    }
+    assert got == want
+    assert got["s1"] == ("archived" if dup else "canceled")
