@@ -21,9 +21,11 @@ test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
 	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
-# Everything, including the slow tail (-m "" clears the deselection).
+# Everything, including the slow tail (-m "" clears the deselection),
+# with the same CPU count and Spark scratch as `make test`.
 test-full:
-	python -m pytest tests/ -q -m ""
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	python -m pytest tests/ -q -m "" -p no:cacheprovider
 
 correctness:
 	python tools/check_correctness.py $(SF_DIR)

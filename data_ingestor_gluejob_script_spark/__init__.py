@@ -16,6 +16,9 @@ Layout
                   dedup, similarity, text, multimodal.
 - ``pipeline``    The two ingestion flows (C1/C2) + partitioned lake
                   upsert writer (K1/O6/O7).
+- ``journal``     The lake-commit journal every lake writer publishes
+                  through: stage, atomic manifest, idempotent publish,
+                  recover on open.
 - ``queries``     The declared query inventory (SURVEY.md §2.3) with
                   DuckDB oracle SQL twins.
 - ``streaming``   Structured Streaming twins: 15 entry points on shared

@@ -21,14 +21,12 @@ natural rewrite unit):
   never written.
 - Only those files are re-read and rewritten; untouched files — the
   overwhelming majority after the first run — stay byte-identical.
-- The rewrite is staged OUTSIDE the lake and committed with a
-  manifest, so a crash at any point either replays harmlessly or
-  resumes: stage (overwrite-idempotent) → manifest (the commit
-  point) → delete originals (skip-missing) → move staged files in
-  (skip-moved) → drop staging. Reads during the
-  delete-originals→move window see the lake without the affected
-  rows — run the migration with the ingest stopped, like any
-  one-time backfill.
+- The rewrite is staged and published through the lake-commit
+  journal (``journal.py``): the corrected files replace the stale
+  ones, and a crash at any point either leaves the lake untouched or
+  resumes the commit on the next run. Mid-commit, a reader may see a
+  stale file beside its corrected copy (transient duplicates), never
+  a missing row.
 
 No reference counterpart (gluejob.py has no digest state at all);
 this is maintenance tooling for this engine's streaming-dedup
@@ -37,72 +35,15 @@ contract. Not driver-registered; tested in tests/test_migrate.py.
 
 from __future__ import annotations
 
-import json
 import logging
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from . import journal
 from .operators.diff import row_digest
 
 log = logging.getLogger(__name__)
-
-# no leading '_': Hadoop input formats treat _/. -prefixed files as
-# hidden, and the resume path reads the manifest through sc.textFile
-_MANIFEST = "backfill-manifest.json"
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(hconf), jvm
-
-
-def _read_manifest(spark: SparkSession, staging_dir: str):
-    fs, jvm = _fs_for(spark, staging_dir)
-    mpath = jvm.org.apache.hadoop.fs.Path(staging_dir, _MANIFEST)
-    if not fs.exists(mpath):
-        return None
-    # read through Spark (filesystem-agnostic; py4j can't read INTO a
-    # python buffer) — the manifest is a one-line json document
-    text = "\n".join(
-        spark.sparkContext.textFile(
-            staging_dir.rstrip("/") + "/" + _MANIFEST
-        ).collect()
-    )
-    return json.loads(text)
-
-
-def _write_manifest(spark: SparkSession, staging_dir: str, doc: dict):
-    fs, jvm = _fs_for(spark, staging_dir)
-    mpath = jvm.org.apache.hadoop.fs.Path(staging_dir, _MANIFEST)
-    out = fs.create(mpath, True)
-    try:
-        out.write(bytearray(json.dumps(doc).encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _commit_staged(spark: SparkSession, lake_dir: str, staging_dir: str, manifest: dict) -> None:
-    """Phases 3-5: delete stale originals (skip-missing), move staged
-    part-files into the lake (skip-already-moved), drop staging. Safe
-    to re-run from any crash point once the manifest exists."""
-    fs, jvm = _fs_for(spark, lake_dir)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    for victim in manifest["files"]:
-        vp = HPath(victim)
-        if fs.exists(vp):
-            fs.delete(vp, False)
-    lake_path = HPath(lake_dir)
-    for status in fs.listStatus(HPath(staging_dir)):
-        name = status.getPath().getName()
-        if name == _MANIFEST or name.startswith("_") or name.startswith("."):
-            continue
-        target = HPath(lake_path, name)
-        if not fs.exists(target):
-            fs.rename(status.getPath(), target)
-    fs.delete(HPath(staging_dir), True)
 
 
 def backfill_digest_column(
@@ -110,38 +51,27 @@ def backfill_digest_column(
     lake_dir: str,
     digest_col: str,
     digest_expr: Column,
-    _crash_after: str | None = None,
 ) -> dict:
     """Rewrite ``digest_col`` to ``digest_expr`` for every lake row
     whose stored value differs (null-safely) from the current
     convention, rewriting ONLY the files that contain such a row.
     Returns ``{"files": n_rewritten_files, "rows": n_changed_rows}``.
     Idempotent: a second run finds no mismatches and writes nothing;
-    an interrupted run resumes from its staged manifest. The lake
+    a run that finds a commit interrupted by a crash finishes it and
+    returns its report with ``"resumed": True``. The lake
     must be an unpartitioned parquet directory (the streaming
     ingests' append layout) — hive-partitioned lakes store partition
     values in directory names, which a file-scoped rewrite would
-    drop, and are rejected.
+    drop, and are rejected."""
+    from .streaming import _data_file_statuses
 
-    ``_crash_after`` ('stage' | 'delete') is a test-only fault hook
-    exercising the crash-resume windows; production callers never
-    pass it."""
-    staging_dir = lake_dir.rstrip("/") + "_backfill_staging"
-
-    # Resume path: a manifest means staging completed but the commit
-    # did not — finish it before looking for (new) stale rows.
-    manifest = _read_manifest(spark, staging_dir)
-    if manifest is not None:
+    resumed = journal.recover(spark, lake_dir)
+    if resumed is not None:
         log.info(
-            "backfill_digest_column: resuming staged migration of %d "
-            "files into %s", len(manifest["files"]), lake_dir,
+            "backfill_digest_column: resumed the rewrite of %d files "
+            "in %s", resumed["files"], lake_dir,
         )
-        _commit_staged(spark, lake_dir, staging_dir, manifest)
-        return {
-            "files": len(manifest["files"]),
-            "rows": manifest["rows"],
-            "resumed": True,
-        }
+        return {**resumed, "resumed": True}
 
     lake = spark.read.parquet(lake_dir)
     if digest_col not in lake.columns:
@@ -155,12 +85,6 @@ def backfill_digest_column(
     )
     victims = [r["_bf_file"] for r in stale.select("_bf_file").distinct().collect()]
     if not victims:
-        # drop any staging left over from a crash BEFORE its manifest
-        # was written (pre-commit-point staging is disposable)
-        fs, jvm = _fs_for(spark, staging_dir)
-        sp = jvm.org.apache.hadoop.fs.Path(staging_dir)
-        if fs.exists(sp):
-            fs.delete(sp, True)
         return {"files": 0, "rows": 0}
 
     scoped = spark.read.parquet(*victims)
@@ -177,27 +101,21 @@ def backfill_digest_column(
     corrected = scoped.withColumn(digest_col, digest_expr).select(
         *lake.columns
     )
-    corrected.write.mode("overwrite").parquet(staging_dir)
-    _write_manifest(
-        spark, staging_dir, {"files": victims, "rows": n_rows}
+    corrected.write.mode("overwrite").parquet(journal.staging(lake_dir))
+    report = {"files": len(victims), "rows": n_rows}
+    journal.commit(
+        spark,
+        lake_dir,
+        [n for n, _ in _data_file_statuses(spark, journal.staging(lake_dir))],
+        # the lake is flat, so a victim's name is its path in the lake
+        [v.rsplit("/", 1)[1] for v in victims],
+        info=report,
     )
-    if _crash_after == "stage":
-        raise RuntimeError("injected crash after staging")
-    fs, jvm = _fs_for(spark, lake_dir)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    for victim in victims:
-        vp = HPath(victim)
-        if fs.exists(vp):
-            fs.delete(vp, False)
-        if _crash_after == "delete":
-            raise RuntimeError("injected crash mid-delete")
-    manifest = {"files": victims, "rows": n_rows}
-    _commit_staged(spark, lake_dir, staging_dir, manifest)
     log.info(
         "backfill_digest_column: rewrote %d rows across %d files in %s",
         n_rows, len(victims), lake_dir,
     )
-    return {"files": len(victims), "rows": n_rows}
+    return report
 
 
 def backfill_doc_dedup_lake(spark: SparkSession, lake_dir: str) -> dict:

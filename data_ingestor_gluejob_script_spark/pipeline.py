@@ -19,8 +19,10 @@ Spark-first re-expression:
   partitions present in the batch (partition-filter pushdown — Spark
   never opens untouched directories), union with explicit precedence,
   ``row_number()`` winner per id (deterministic where the reference's
-  ``keep='first'`` is order-dependent), then dynamic partition
-  overwrite — only directories present in the output are replaced.
+  ``keep='first'`` is order-dependent), written to staging; the
+  lake-commit journal (``journal.py``) then replaces exactly the
+  partition directories the write produced, crash-safely, as the
+  reference's one ``put_object`` per partition is atomic.
 - The one-file-per-partition constraint is dropped (it caps write
   parallelism and forces 100 TB partitions through one task); the
   directory contract is preserved, which is what downstream readers
@@ -33,7 +35,9 @@ result — a list of (year, month) pairs, bounded by the calendar, not
 the data. The lake writer gets it, with the batch's row count (the
 empty-batch skip) and NULL-id count (the PK guard), from ONE
 evaluation of the batch (``_evaluated_batch``): a ``noop`` write
-carrying an Observation.
+carrying an Observation. The partitions the merge wrote come from an
+Observation on the write itself, and the journal publishes each one
+with about three filesystem calls — no listing, no Spark job.
 
 - daily increments (``broadcast_batch=True``): that write also fills
   a persisted copy of the batch, and the merge reads the cache, so the
@@ -57,12 +61,13 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import journal
 from .operators.normalize import normalize_booleans
 from .operators.relational import semi_join, watermark_filter
 from .operators.temporal import derive_partitions, format_ts_micro, parse_ts
 from .operators.upsert import merge_upsert, upsert_dedup
 from .registry import CATALOG, TableSpec, tables_list
-from .sources.files import read_csv_table, read_parquet_table
+from .sources.files import _hadoop_path, read_csv_table, read_parquet_table
 from .watermarks import WATERMARK_FORMAT, WatermarkStore
 
 log = logging.getLogger(__name__)
@@ -79,7 +84,7 @@ def _partition_predicate(ycol: str, mcol: str, touched: list[tuple]):
     null-safe: a NULL partition value (NULL event time →
     __HIVE_DEFAULT_PARTITION__) needs an isNull term — ``col == None``
     is SQL NULL, never true, which would exclude existing
-    null-partition rows from a merge while dynamic overwrite still
+    null-partition rows from a merge while the journal still
     replaces that directory, silently deleting them. Shared by the
     upsert merge and the erasure path so partition addressing can't
     drift between them."""
@@ -106,14 +111,13 @@ def _evaluated_batch(
     NULL-id count (the PK guard), the (year, month) partitions it
     touches and, with ``broadcast_batch``, whether its ids are unique
     (the merge then skips its within-batch dedup window). Yields
-    ``(prepared, touched, batch_touched, n_rows, unique_ids)``, where
-    ``touched`` additionally covers the CDC delete arm's victim
-    partitions; ``unique_ids`` is always False without
-    ``broadcast_batch``, whose batch is too big for an id set on the
-    driver. With ``broadcast_batch`` the batch is persisted, and
-    the cache is released on every exit — guard raise, empty return,
-    failed write — because the streaming sink calls the writer once
-    per micro-batch.
+    ``(prepared, touched, n_rows, unique_ids)``, where ``touched``
+    also covers the CDC delete arm's victim partitions; ``unique_ids``
+    is always False without ``broadcast_batch``, whose batch is too big
+    for an id set on the driver. With ``broadcast_batch`` the batch is
+    persisted, and the cache is released on every exit — guard raise,
+    empty return, failed write — because the streaming sink calls the
+    writer once per micro-batch.
 
     The PK guard matters because the writer runs the merge's anti
     join with plain-equality keys (``keys_nullable=False``), which is
@@ -151,7 +155,6 @@ def _evaluated_batch(
         stats = obs.get
         n_rows, null_ids = stats["n"], stats["null_ids"]
         unique_ids = broadcast_batch and stats["distinct_ids"] == n_rows
-        batch_touched = [(p[0], p[1]) for p in stats["parts"]]
         if null_ids:
             raise ValueError(
                 f"write_partitioned_upsert: {null_ids} row(s) with NULL "
@@ -160,11 +163,11 @@ def _evaluated_batch(
                 "join); a NULL id can never be upserted over and would "
                 "strand forever. Fix the extraction or pre-filter."
             )
-        touched = list(batch_touched)
+        touched = [(p[0], p[1]) for p in stats["parts"]]
         for part in delete_touched or []:
             if part not in touched:
                 touched.append(part)
-        yield prepared, touched, batch_touched, int(n_rows), unique_ids
+        yield prepared, touched, int(n_rows), unique_ids
     finally:
         if broadcast_batch:
             prepared.unpersist()
@@ -198,7 +201,7 @@ def _scope_existing(
     THIS company's — company is a partition column, so on a
     multi-company lake an unscoped read would merge other companies'
     rows into this company's rewrite (re-stamped with the wrong
-    company literal) while dynamic overwrite left their own partitions
+    company literal) while the journal left their own partitions
     intact — duplication, and under the fused delete arm,
     cross-company erasure. Both predicates push down as partition
     pruning.
@@ -233,23 +236,26 @@ def _lake_schema(prepared: DataFrame, spec: TableSpec) -> T.StructType:
     )
 
 
-def _partition_dir(
-    spark: SparkSession, root: str, table: str, company: str, y, m
-) -> str:
-    """Filesystem path of one (company, year, month) partition
-    directory — the single spelling of the Hive layout used by the
-    compat rename and the erasure cleanup. Values go through Spark's
-    own Hive path escaping (ExternalCatalogUtils.escapePathName), so
-    a company like "Foo:Bar" resolves to the company=Foo%3ABar
-    directory the writer actually created — a hand-built unescaped
-    path would silently miss it and, on the erasure paths, leave
-    supposedly-deleted rows readable (round-9 review finding)."""
+def _partition_paths(
+    spark: SparkSession, table: str, company: str, parts
+) -> list[str]:
+    """Paths, relative to the table root, of one company's (year,
+    month) partition directories — the single spelling of the Hive
+    layout, which the journal publishes and removes. The company goes
+    through Spark's own Hive path escaping
+    (ExternalCatalogUtils.escapePathName), so "Foo:Bar" resolves to the
+    company=Foo%3ABar directory the writer actually created — a
+    hand-built unescaped path would silently miss it and, on the
+    erasure paths, leave supposedly-deleted rows readable (round-9
+    review finding). Years and months are integers or NULL, which need
+    no escaping."""
     esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    return (
-        f"{root}/company={esc(company)}"
-        f"/{table}_year={esc(_part_dir_value(y))}"
-        f"/{table}_month={esc(_part_dir_value(m))}"
-    )
+    c = f"company={esc(company)}"
+    return [
+        f"{c}/{table}_year={_part_dir_value(y)}"
+        f"/{table}_month={_part_dir_value(m)}"
+        for y, m in parts
+    ]
 
 
 def write_partitioned_upsert(
@@ -307,12 +313,17 @@ def write_partitioned_upsert(
     s3_parquet_file_put_and_update (gluejob.py:173-205) as one
     distributed plan.
 
+    Publication: the merged partitions are written to the journal's
+    staging, and ``journal.commit`` publishes the partitions the
+    write's Observation saw and removes the touched ones it did not
+    (the delete arm emptied them). A crash at any step recovers to
+    the old or the new lake on the next write (``journal.recover``),
+    never to a partition missing its untouched rows.
+
     ``delete_keys`` (+ ``delete_touched``, the victim partitions the
     caller discovered) fuses a CDC delete arm into the SAME rewrite:
-    the scoped lake read anti-joins the keys before the merge, the
-    touched-partition predicate covers both arms, and partitions the
-    deletes fully emptied are removed explicitly (dynamic overwrite
-    cannot clear a partition that gets no output rows). One lake
+    the scoped lake read anti-joins the keys before the merge, and the
+    touched-partition predicate covers both arms. One lake
     read + one write where the unfused upsert-then-forget_rows
     sequence paid two of each on overlapping partitions. Requires a
     NON-EMPTY batch (the merged write's Observation needs rows to
@@ -321,15 +332,16 @@ def write_partitioned_upsert(
     ``single_object_compat=True`` reproduces the reference's exact
     on-disk contract — ONE parquet object named ``{table}.parquet``
     per partition directory (gluejob.py:187,201-203) — for downstream
-    readers that GET that key instead of listing the directory. It
-    routes each partition through a single task (a deliberate
-    parallelism cap), so leave it off at scale and run the default
-    multi-file layout + ``compact_partitions`` instead.
+    readers that GET that key instead of listing the directory. The
+    lone part file is renamed in staging, before the commit point, so
+    a partition written as several files raises with the lake
+    untouched. It routes each partition through a single task (a
+    deliberate parallelism cap), so leave it off at scale and run the
+    default multi-file layout + ``compact_partitions`` instead.
     """
     with _evaluated_batch(batch, spec, broadcast_batch, delete_touched) as (
         prepared,
         touched,
-        batch_touched,
         n_rows,
         unique_ids,
     ):
@@ -351,23 +363,15 @@ def write_partitioned_upsert(
 
         ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
         root = lake_table_root(lake_root, spec.name)
+        journal.recover(spark, root)
         existing = read_parquet_table(spark, root, _lake_schema(prepared, spec))
         # ``touched`` (the batch's partitions plus the delete arm's)
-        # drives both the lake pruning predicate and the compat rename
-        # scope.
+        # drives the lake pruning predicate.
         if existing is not None:
             existing = _scope_existing(
                 existing, spec, ycol, mcol, touched, company
             )
-
-        emptied: list[tuple] = []
         if delete_keys is not None and existing is not None:
-            if single_object_compat:
-                raise ValueError(
-                    "write_partitioned_upsert: delete_keys is not "
-                    "supported with single_object_compat (the rename "
-                    "scope and emptied-dir removal would conflict)"
-                )
             # No distinct: a left anti join ignores duplicate keys.
             key = delete_keys.select(
                 F.col(delete_keys.columns[0]).alias(spec.id_col)
@@ -375,24 +379,6 @@ def write_partitioned_upsert(
             existing = existing.join(
                 F.broadcast(key), spec.id_col, "left_anti"
             )
-            # Which delete-arm partitions still hold rows after the
-            # fused merge — resolved BEFORE the overwrite (the write
-            # mutates the path this plan reads). A partition receiving
-            # batch rows can never empty; only delete_touched -
-            # batch_touched can.
-            at_risk = [
-                p for p in (delete_touched or []) if p not in batch_touched
-            ]
-            if at_risk:
-                risk_pred = _partition_predicate(ycol, mcol, at_risk)
-                kept = {
-                    (r[0], r[1])
-                    for r in existing.filter(risk_pred)
-                    .select(ycol, mcol)
-                    .distinct()
-                    .collect()
-                }
-                emptied = [p for p in at_risk if p not in kept]
 
         # With unique ids the within-batch dedup window is the
         # identity, so it is skipped: a daily increment then merges
@@ -421,15 +407,17 @@ def write_partitioned_upsert(
                 # tests/test_merge_upsert.py).
                 keys_nullable=False,
             )
-        # Row count via an Observation on the write itself: a separate
-        # .count() would execute the full merge plan (the incoming-side
-        # window dedup, if it runs + broadcast/sort-merge anti join
-        # against the pruned lake scan + union) a second time just for
-        # the number.
+        # Row count and written partitions via an Observation on the
+        # write itself: a separate action would execute the full merge
+        # plan (the incoming-side window dedup, if it runs +
+        # broadcast/sort-merge anti join against the pruned lake scan +
+        # union) a second time just for them.
         obs = Observation(f"upsert_{spec.name}")
-        out = merged.observe(obs, F.count(F.lit(1)).alias("n")).withColumn(
-            "company", F.lit(company)
-        )
+        out = merged.observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(F.struct(ycol, mcol)).alias("parts"),
+        ).withColumn("company", F.lit(company))
         if single_object_compat:
             # Hash-partition on the partition columns so each (company,
             # year, month) combination lands in exactly one task →
@@ -444,99 +432,33 @@ def write_partitioned_upsert(
             writer = writer.option(
                 "maxRecordsPerFile", str(max_records_per_file)
             )
-        (
-            # Per-writer dynamic overwrite: only partitions present in
-            # `merged` are replaced. Set on the writer (not the session)
-            # so the contract holds for caller-supplied vanilla sessions
-            # too — a session-level default of "static" would otherwise
-            # wipe the whole table root and the touched-scoped rename
-            # below would miss partitions that silently lost their
-            # files.
-            writer.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("company", ycol, mcol)
-            .parquet(root)
+        writer.mode("overwrite").partitionBy("company", ycol, mcol).parquet(
+            journal.staging(root)
         )
         n = int(obs.get["n"])
+        written = {(p[0], p[1]) for p in obs.get["parts"]}
+        publish = _partition_paths(spark, spec.name, company, written)
         if single_object_compat:
-            _rename_to_single_objects(
-                spark, root, spec.name, company, touched
+            journal.name_staged_files(
+                spark, root, publish, f"{spec.name}.parquet"
             )
-        if emptied:
-            _remove_partition_dirs(spark, root, spec.name, company, emptied)
+        # A touched partition the merge left without rows (the delete
+        # arm emptied it) is removed.
+        emptied = [p for p in touched if p not in written]
+        journal.commit(
+            spark,
+            root,
+            publish,
+            _partition_paths(spark, spec.name, company, emptied),
+        )
         log.info("upserted %d rows into %s", n, root)
         return n
-
-
-def _remove_partition_dirs(
-    spark: SparkSession, root: str, table: str, company: str, parts
-) -> None:
-    """Explicitly delete partition directories dynamic overwrite left
-    behind (it cannot clear a partition that produced no output rows)
-    — shared by the fused CDC write and forget_rows, Hadoop FS API so
-    it works on local/HDFS/s3a alike."""
-    jvm = spark._jvm
-    fs = None
-    for y, m in parts:
-        part_dir = _partition_dir(spark, root, table, company, y, m)
-        path = jvm.org.apache.hadoop.fs.Path(part_dir)
-        if fs is None:
-            fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(path):
-            fs.delete(path, True)
 
 
 def _part_dir_value(v) -> str:
     """Directory-name form of a partition value (Hive convention for
     null partitions)."""
     return "__HIVE_DEFAULT_PARTITION__" if v is None else str(v)
-
-
-def _rename_to_single_objects(
-    spark: SparkSession,
-    root: str,
-    table: str,
-    company: str,
-    touched: list[tuple],
-) -> None:
-    """Rename each TOUCHED partition's lone ``part-*.parquet`` to the
-    reference's object name ``{table}.parquet`` (gluejob.py:187).
-
-    Scoped to the (year, month) partitions this batch actually wrote:
-    a table-root-wide glob would also sweep untouched partitions, and
-    an untouched partition holding several ``part-*`` files (written in
-    the default multi-file mode, or compacted with
-    ``target_files_per_partition > 1``) would lose all but one of them
-    to the rename-over-delete. A touched partition with more than one
-    ``part-*`` file raises instead of guessing — it means the
-    single-task-per-partition invariant of the compat write was broken.
-
-    Goes through the Hadoop FileSystem API so the same code works on
-    any path scheme (local, HDFS, s3a) — object stores implement
-    rename as copy+delete, one more reason this mode is compat-only.
-    """
-    jvm = spark._jvm
-    fs = None
-    for y, m in touched:
-        part_dir = _partition_dir(spark, root, table, company, y, m)
-        pattern = jvm.org.apache.hadoop.fs.Path(f"{part_dir}/part-*.parquet")
-        if fs is None:
-            fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-        matches = list(fs.globStatus(pattern) or [])
-        if len(matches) > 1:
-            raise IOError(
-                f"compat rename expects one part file in {part_dir}, "
-                f"found {len(matches)} — refusing to delete data"
-            )
-        for status in matches:
-            src = status.getPath()
-            dst = jvm.org.apache.hadoop.fs.Path(
-                src.getParent(), f"{table}.parquet"
-            )
-            if fs.exists(dst):  # re-upsert into an already-compat partition
-                fs.delete(dst, False)
-            if not fs.rename(src, dst):
-                raise IOError(f"compat rename failed: {src} -> {dst}")
 
 
 def compact_partitions(
@@ -550,19 +472,25 @@ def compact_partitions(
 
     Incremental upserts accumulate files per partition (each batch's
     tasks write their own); scan cost grows with file count, not data.
-    Compaction is a read → repartition-within-partition → dynamic
-    partition overwrite. Run it out-of-band (the reference has no
-    analogue — its one-file-per-partition writes WERE the compaction,
-    at the cost of single-task writes).
+    Compaction is a read → repartition-within-partition → staged
+    write, then every partition published through the journal. Run it
+    out-of-band (the reference has no analogue — its
+    one-file-per-partition writes WERE the compaction, at the cost of
+    single-task writes).
 
     Returns the number of rows rewritten.
     """
+    journal.recover(spark, table_root)
     # mergeSchema: compaction REWRITES the lake — a one-footer scan of
     # a schema-evolved table would rewrite it without the columns only
     # some generations carry, which is silent data loss (same contract
     # as the upsert writer's existing-lake read).
     df = spark.read.option("mergeSchema", "true").parquet(table_root)
     part_cols = _partition_cols(spark, df, table_root)
+    if not part_cols:
+        raise ValueError(
+            f"compact_partitions: {table_root} has no partition directories"
+        )
     obs = Observation("compact_rows")
     observed = df.observe(obs, F.count(F.lit(1)).alias("n"))
     if target_files_per_partition > 1:
@@ -584,17 +512,18 @@ def compact_partitions(
         reparted = observed.repartition(n_parts, *part_cols, salt)
     else:
         reparted = observed.repartition(*part_cols)
-    (
-        reparted.write.mode("overwrite")
-        # Per-writer dynamic overwrite, NOT inherited from the session:
-        # under a vanilla session (static default) Spark would delete
-        # the whole table root before the write job reads the input
-        # files it is compacting — total loss of the table. Same
-        # contract (and comment) as the upsert writer above.
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*part_cols)
-        .parquet(table_root)
+    stage = journal.staging(table_root)
+    reparted.write.mode("overwrite").partitionBy(*part_cols).parquet(stage)
+    # Every partition directory, as Spark named it: one glob.
+    fs, leaves = _hadoop_path(
+        spark, stage + "".join(f"/{c}=*" for c in part_cols)
     )
+    depth = len(part_cols)
+    publish = [
+        "/".join(s.getPath().toString().split("/")[-depth:])
+        for s in fs.globStatus(leaves) or []
+    ]
+    journal.commit(spark, table_root, publish, [])
     return int(obs.get["n"])
 
 
@@ -608,17 +537,12 @@ def _partition_cols(spark: SparkSession, df, table_root: str) -> list[str]:
     make compaction ``partitionBy()`` nothing and flatten the lake's
     partition layout.
     """
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(table_root).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
+    fs, _ = _hadoop_path(spark, table_root)
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
     found = []
     for col in df.columns:
         for depth in ("", "*/", "*/*/"):
-            pattern = jvm.org.apache.hadoop.fs.Path(
-                f"{table_root}/{depth}{col}=*"
-            )
-            if fs.globStatus(pattern):
+            if fs.globStatus(hpath(f"{table_root}/{depth}{col}=*")):
                 found.append(col)
                 break
     return found
@@ -822,15 +746,15 @@ def forget_rows(
     - The touched (year, month) set comes from one semi-join projected
       to the partition columns; the collect is calendar-bounded.
     - Only touched partitions are scanned (partition-pruning
-      predicate) and rewritten (dynamic overwrite); the rest of the
-      lake — the overwhelming majority — is never read or written.
-    - A partition whose every row is deleted produces NO output rows,
-      which dynamic overwrite would silently leave in place — those
-      directories are removed explicitly through the Hadoop FS API
-      (works on local/HDFS/s3a alike).
+      predicate) and rewritten; the rest of the lake — the
+      overwhelming majority — is never read or written.
+    - The survivors are staged, and the journal publishes the touched
+      partitions that keep rows and removes those whose every row was
+      erased.
     """
     ycol, mcol = f"{spec.name}_year", f"{spec.name}_month"
     root = lake_table_root(lake_root, spec.name)
+    journal.recover(spark, root)
     lake = read_parquet_table(spark, root)
     if lake is None:
         return 0
@@ -853,11 +777,8 @@ def forget_rows(
     scoped = lake.filter(pred)
     # One left join of the scoped lake to the flagged (distinct) keys
     # serves both the survivors and, from ONE grouped pass, the rows
-    # erased and the touched partitions that still hold rows AFTER the
-    # erasure — resolved BEFORE the overwrite (the write mutates the
-    # path the plan reads). Fully-erased partitions emit no output
-    # rows, so dynamic overwrite leaves their old files in place;
-    # they're removed explicitly below.
+    # erased and the touched partitions that still hold rows after the
+    # erasure.
     flagged = scoped.join(
         F.broadcast(key.withColumn("_hit", F.lit(True))), spec.id_col, "left"
     )
@@ -870,22 +791,22 @@ def forget_rows(
         .collect()
     )
     n = sum(r["erased"] for r in per_part)
-    kept = {(r[0], r[1]) for r in per_part if r["kept"]}
+    kept = [(r[0], r[1]) for r in per_part if r["kept"]]
 
     (
         flagged.filter(F.col("_hit").isNull())
         .drop("_hit")
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("company", ycol, mcol)
-        .parquet(root)
+        .parquet(journal.staging(root))
     )
-    _remove_partition_dirs(
+    journal.commit(
         spark,
         root,
-        spec.name,
-        company,
-        [p for p in touched if p not in kept],
+        _partition_paths(spark, spec.name, company, kept),
+        _partition_paths(
+            spark, spec.name, company, [p for p in touched if p not in kept]
+        ),
     )
     log.info("forgot %d rows from %s across %d partitions",
              n, root, len(touched))
@@ -925,6 +846,7 @@ def apply_cdc_batch(
     """
     op = F.upper(F.col(op_col))
     changes = changes.persist()
+    latest = None
     try:
         # Fail LOUD on unknown/null ops: upper(NULL) is NULL, so a
         # malformed row would otherwise satisfy neither the upsert nor
@@ -968,10 +890,14 @@ def apply_cdc_batch(
                 *[F.col(c).cast("string") for c in payload_cols]
             ).asc_nulls_last(),
         )
+        # Pinned: the upsert count, the victims aggregation, the
+        # writer's evaluation pass and the merge's delete keys all read
+        # it, and each would otherwise run the window again.
         latest = (
             changes.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
+            .persist()
         )
         upserts = latest.filter(op != "D").select(*spec.columns)
         deletes = latest.filter(op == "D").select(spec.id_col)
@@ -979,9 +905,7 @@ def apply_cdc_batch(
         # count the CHANGE rows applied, not the writer's merged-rows
         # return (which includes surviving lake rows of touched
         # partitions), and count BEFORE the write to route a
-        # pure-erasure batch; cheap — one batch-sized window over the
-        # batch persisted above (which the delete arm still reads
-        # while the writer caches its own prepared upserts)
+        # pure-erasure batch; this action fills the pinned window
         n_up = upserts.count()
         if n_up == 0:
             # pure-erasure batch: the fused write needs batch rows to
@@ -999,9 +923,9 @@ def apply_cdc_batch(
         # overlapping partitions (r9 steady-state CDC cost, PLANS.md).
         n_del = 0
         delete_touched: list[tuple] = []
-        lake = read_parquet_table(
-            spark, lake_table_root(lake_root, spec.name)
-        )
+        root = lake_table_root(lake_root, spec.name)
+        journal.recover(spark, root)
+        lake = read_parquet_table(spark, root)
         # n_raw_deletes > 0 is a superset probe for "any deletes
         # survive the window" (a surviving delete implies a raw D
         # row); the rare all-D-rows-lost batch just runs an empty
@@ -1030,3 +954,5 @@ def apply_cdc_batch(
         return n_up, n_del
     finally:
         changes.unpersist()
+        if latest is not None:
+            latest.unpersist()

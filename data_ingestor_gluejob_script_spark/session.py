@@ -77,7 +77,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Testdata events.ts has shipped as both TIMESTAMP(NANOS) and
         # timestamp[us] across regenerations; nanosAsLong keeps the
         # NANOS encoding readable (as long) without mid-query conf

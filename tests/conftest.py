@@ -73,3 +73,54 @@ def write_plan(spark):
         return out, plans[-1]
 
     return run
+
+
+class InjectedCrash(RuntimeError):
+    """Raised by ``journal_crash`` in place of a filesystem call."""
+
+
+class _CrashingFS:
+    """Proxy of a Hadoop FileSystem that records each mutating call
+    and raises InjectedCrash in place of call number ``crash_at``."""
+
+    MUTATING = {"create", "rename", "delete", "mkdirs"}
+
+    def __init__(self, fs, calls: list, crash_at: int | None):
+        self._fs, self._calls, self._crash_at = fs, calls, crash_at
+
+    def __getattr__(self, name):
+        attr = getattr(self._fs, name)
+        if name not in self.MUTATING:
+            return attr
+
+        def call(*args):
+            if len(self._calls) == self._crash_at:
+                raise InjectedCrash(f"crash at call {self._crash_at}: {name}")
+            self._calls.append(name)
+            return attr(*args)
+
+        return call
+
+
+@pytest.fixture()
+def journal_crash(monkeypatch):
+    """``journal_crash(k)`` makes the lake-commit journal's mutating
+    filesystem call number ``k`` (create, rename, delete or mkdirs,
+    counted from 0 over everything the journal does from now on)
+    raise InjectedCrash; ``k=None`` only counts. Returns the list the
+    calls made are appended to."""
+    from data_ingestor_gluejob_script_spark import journal
+
+    real = journal._hadoop_path
+
+    def arm(k):
+        calls: list[str] = []
+
+        def wrapped(spark, path):
+            fs, p = real(spark, path)
+            return _CrashingFS(fs, calls, k), p
+
+        monkeypatch.setattr(journal, "_hadoop_path", wrapped)
+        return calls
+
+    return arm

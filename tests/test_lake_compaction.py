@@ -2,14 +2,14 @@
 lakes (signature ledger + curated corpus) — r15 verdict #1. The band
 lake heals by re-deriving from the signature lake; these lakes ARE
 the truth, so compaction bin-packs ONLY the sub-target small-file
-tail into target-sized files behind a scoped swap-manifest marker:
-graduated (at-target) files are never re-read or rewritten, so
-per-compaction cost is O(new data + one runt), never O(lake). Covers:
-every crash window of the scoped protocol, the legacy whole-directory
-marker, the incremental/uncapped properties, the recovery-aware
-reader, the out-of-band seam, and the end-to-end ingest keeping both
-lakes' file counts bounded while content and replay parity stay
-exact."""
+tail into target-sized files and publishes them through the
+lake-commit journal: graduated (at-target) files are never re-read or
+rewritten, so per-compaction cost is O(new data + one runt), never
+O(lake). Covers: the legacy whole-directory marker, the
+incremental/uncapped properties, the recovery-aware reader, the
+out-of-band seam, and the end-to-end ingest keeping both lakes' file
+counts bounded while content and replay parity stay exact. Every
+crash window of the journal is in tests/test_journal.py."""
 
 from __future__ import annotations
 
@@ -23,15 +23,10 @@ import pyspark.sql.functions as F  # noqa: F401
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from data_ingestor_gluejob_script_spark import streaming  # noqa: E402
+from data_ingestor_gluejob_script_spark import journal, streaming  # noqa: E402
 from data_ingestor_gluejob_script_spark.streaming import (  # noqa: E402
     _compact_append_lake,
     _data_file_statuses,
-    _finish_scoped_swap,
-    _lake_marker,
-    _lake_staging,
-    _recover_lake_swap,
-    _write_swap_manifest,
     compact_append_lakes,
     read_append_lake,
     run_neardup_ingest,
@@ -62,136 +57,60 @@ def _touch(path):
     open(path, "w").close()
 
 
-def _staged_pack(spark, lake):
-    """Perform step 1 of the protocol by hand: pack the lake's current
-    small files into staging; return (small_names, staged_names)."""
-    small = _parquets(lake)
-    spark.read.parquet(*[f"{lake}/{n}" for n in small]).repartition(
-        1
-    ).write.mode("overwrite").parquet(_lake_staging(lake))
-    return small, _parquets(_lake_staging(lake))
-
-
-def test_recover_scoped_swap_every_crash_window(spark, tmp_path):
-    lake = str(tmp_path / "lake")
-
-    # window 0: nothing pending — recovery is a no-op
-    _write(spark, lake, [(1,), (2,)])
-    _append_one(spark, lake, [(3,)])
-    _recover_lake_swap(spark, lake)
-    assert _vals(spark, lake) == [1, 2, 3]
-
-    # window 1: crash DURING the staging pack (no marker yet) — the
-    # lake is authoritative, the orphan staging is dropped
-    _staged_pack(spark, lake)
-    _recover_lake_swap(spark, lake)
-    assert _vals(spark, lake) == [1, 2, 3]
-    assert not os.path.exists(_lake_staging(lake))
-
-    # window 2: crash after the manifest marker, before any publish —
-    # recovery publishes the pack and deletes the replaced files
-    small, staged = _staged_pack(spark, lake)
-    _write_swap_manifest(spark, lake, staged, small)
-    _recover_lake_swap(spark, lake)
-    assert _vals(spark, lake) == [1, 2, 3]
-    assert _parquets(lake) == staged  # pack in, originals gone
-    assert not os.path.exists(_lake_staging(lake))
-    assert not os.path.exists(_lake_marker(lake))
-
-    # window 3: crash mid-publish — one pack file already moved in.
-    # (multi-file pack: stage two packs by hand)
-    for v in (4, 5):
-        _append_one(spark, lake, [(v,)])
-    small = _parquets(lake)
-    spark.read.parquet(*[f"{lake}/{n}" for n in small]).repartition(
-        2
-    ).write.mode("overwrite").parquet(_lake_staging(lake))
-    staged = _parquets(_lake_staging(lake))
-    _write_swap_manifest(spark, lake, staged, small)
-    os.rename(
-        os.path.join(_lake_staging(lake), staged[0]),
-        os.path.join(lake, staged[0]),
-    )
-    _recover_lake_swap(spark, lake)
-    assert _vals(spark, lake) == [1, 2, 3, 4, 5]
-    assert _parquets(lake) == sorted(staged)
-    assert not os.path.exists(_lake_staging(lake))
-    assert not os.path.exists(_lake_marker(lake))
-
-    # window 4: crash mid-delete — pack fully published, one replaced
-    # file already deleted, staging partially cleaned
-    _append_one(spark, lake, [(6,)])
-    small, staged2 = _staged_pack(spark, lake)
-    _write_swap_manifest(spark, lake, staged2, small)
-    for n in staged2:
-        os.rename(
-            os.path.join(_lake_staging(lake), n), os.path.join(lake, n)
-        )
-    os.remove(os.path.join(lake, small[0]))
-    _recover_lake_swap(spark, lake)
-    assert _vals(spark, lake) == [1, 2, 3, 4, 5, 6]
-    assert _parquets(lake) == sorted(staged2)
-    assert not os.path.exists(_lake_staging(lake))
-    assert not os.path.exists(_lake_marker(lake))
-
-    # window 5: everything done but the marker delete — recovery is a
-    # pure cleanup (staged files all published, staging gone)
-    _append_one(spark, lake, [(7,)])
-    small, staged3 = _staged_pack(spark, lake)
-    _write_swap_manifest(spark, lake, staged3, small)
-    _finish_scoped_swap(spark, lake, staged3, small)
-    _write_swap_manifest(spark, lake, staged3, small)  # marker back
-    _recover_lake_swap(spark, lake)
-    assert _vals(spark, lake) == [1, 2, 3, 4, 5, 6, 7]
-    assert not os.path.exists(_lake_marker(lake))
+def _no_journal(lake):
+    return not os.path.exists(os.path.dirname(journal.staging(lake)))
 
 
 def test_recover_legacy_zero_byte_marker(spark, tmp_path):
     """Pre-r16 whole-directory swaps mid-crash are still honored: a
     zero-byte marker means staging is the authoritative FULL copy."""
     lake = str(tmp_path / "lake")
+    copy, marker = lake + "._compacted", lake + "._swap_pending"
     _write(spark, lake, [(1,), (2,)])
-    _write(spark, _lake_staging(lake), [(7,), (8,)])
-    _touch(_lake_marker(lake))
-    _recover_lake_swap(spark, lake)
+    _write(spark, copy, [(7,), (8,)])
+    _touch(marker)
+    journal.recover(spark, lake)
     assert _vals(spark, lake) == [7, 8]
-    assert not os.path.exists(_lake_staging(lake))
-    assert not os.path.exists(_lake_marker(lake))
+    assert not os.path.exists(copy)
+    assert not os.path.exists(marker)
 
     # legacy window: crash between delete(lake) and rename
-    _write(spark, _lake_staging(lake), [(5,)])
-    _touch(_lake_marker(lake))
+    _write(spark, copy, [(5,)])
+    _touch(marker)
     shutil.rmtree(lake)
-    _recover_lake_swap(spark, lake)
+    journal.recover(spark, lake)
     assert _vals(spark, lake) == [5]
 
     # legacy window: crash after the rename, before the marker delete
-    _touch(_lake_marker(lake))
-    _recover_lake_swap(spark, lake)
+    _touch(marker)
+    journal.recover(spark, lake)
     assert _vals(spark, lake) == [5]
-    assert not os.path.exists(_lake_marker(lake))
+    assert not os.path.exists(marker)
 
 
-def test_read_append_lake_never_sees_mid_swap_duplicates(spark, tmp_path):
+def test_read_append_lake_never_sees_mid_swap_duplicates(
+    spark, tmp_path, journal_crash
+):
     """Advice r15: an external reader of the raw lake dir could see
-    the mid-swap state (pack published, originals not yet deleted —
-    transient duplicates). read_append_lake completes the swap first
+    the mid-commit state (pack published, originals not yet deleted —
+    transient duplicates). read_append_lake completes the commit first
     and must return the exact corpus."""
     lake = str(tmp_path / "lake")
     _write(spark, lake, [(1,)])
     _append_one(spark, lake, [(2,)])
-    small, staged = _staged_pack(spark, lake)
-    _write_swap_manifest(spark, lake, staged, small)
-    for n in staged:  # publish the pack, crash before the deletes
-        os.rename(
-            os.path.join(_lake_staging(lake), n), os.path.join(lake, n)
-        )
+    # journal calls: manifest create + rename (0, 1), the one pack
+    # file's delete-if-present, mkdirs and rename (2-4), then the
+    # first small-file delete (5): crash there
+    journal_crash(5)
+    with pytest.raises(RuntimeError, match="crash at call"):
+        _compact_append_lake(spark, lake)
+    journal_crash(None)
     # raw read at this instant WOULD double-count
     assert _vals(spark, lake) == [1, 1, 2, 2]
     assert sorted(
         r["x"] for r in read_append_lake(spark, lake).collect()
     ) == [1, 2]
-    assert not os.path.exists(_lake_marker(lake))
+    assert _no_journal(lake)
 
 
 def test_compact_append_lake_preserves_rows_and_bounds_files(
@@ -204,8 +123,7 @@ def test_compact_append_lake_preserves_rows_and_bounds_files(
     _compact_append_lake(spark, lake)
     assert _vals(spark, lake) == list(range(12))
     assert len(_data_file_statuses(spark, lake)) <= 2
-    assert not os.path.exists(_lake_marker(lake))
-    assert not os.path.exists(_lake_staging(lake))
+    assert _no_journal(lake)
 
 
 def _fat_file(spark, lake, n_rows, seed):
@@ -478,13 +396,16 @@ def test_band_ledger_pack_trigger_ignores_graduated_files(
 
 def test_recovery_drops_orphan_manifest_tmp(spark, tmp_path):
     """Review r16: a crash between creating the manifest .tmp and
-    renaming it into place must not leave debris — marker-absent
+    renaming it into place must not leave debris — manifest-absent
     recovery drops the orphan .tmp along with orphan staging."""
     lake = str(tmp_path / "lake")
     _write(spark, lake, [(1,)])
-    tmp_marker = _lake_marker(lake) + ".tmp"
-    with open(tmp_marker, "w") as f:
-        f.write('{"staged": [], "replaced": []}')
-    _recover_lake_swap(spark, lake)
-    assert not os.path.exists(tmp_marker)
+    _write(spark, journal.staging(lake), [(9,)])
+    tmp_manifest = os.path.join(
+        os.path.dirname(journal.staging(lake)), "manifest.json.tmp"
+    )
+    with open(tmp_manifest, "w") as f:
+        f.write('{"publish": [], "remove"')  # truncated mid-write
+    journal.recover(spark, lake)
+    assert _no_journal(lake)
     assert _vals(spark, lake) == [1]

@@ -1,8 +1,8 @@
 """Tests for the one-time digest backfill (migrate.py): a legacy lake
 written under the pre-sentinel digest conventions is upgraded in place
 — only stale files rewritten, untouched files byte-identical, replays
-against the upgraded lake append nothing, the tool is idempotent, and
-every crash window resumes."""
+against the upgraded lake append nothing, and the tool is idempotent.
+Its crash windows are in tests/test_journal.py's fault matrix."""
 
 from __future__ import annotations
 
@@ -16,7 +16,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from data_ingestor_gluejob_script_spark import streaming  # noqa: E402
+from data_ingestor_gluejob_script_spark import journal, streaming  # noqa: E402
 from data_ingestor_gluejob_script_spark.migrate import (  # noqa: E402
     backfill_digest_column,
     backfill_doc_dedup_lake,
@@ -116,36 +116,6 @@ def test_doc_backfill_makes_replay_append_nothing(spark, tmp_path):
     assert spark.read.parquet(lake).count() == len(DOCS)
 
 
-@pytest.mark.parametrize("crash_after", ["stage", "delete"])
-def test_backfill_crash_windows_resume(spark, tmp_path, crash_after):
-    """Injected crashes after staging and mid-delete: the rerun picks
-    up the staged manifest, finishes the commit, and the lake ends
-    complete and convention-correct with no duplicate rows."""
-    lake = str(tmp_path / "lake")
-    _legacy_doc_lake(spark, lake)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        backfill_digest_column(
-            spark, lake, "text_md5", row_digest(["text"]),
-            _crash_after=crash_after,
-        )
-    res = backfill_digest_column(
-        spark, lake, "text_md5", row_digest(["text"])
-    )
-    assert res["resumed"] is True and res["rows"] == 1
-    got = spark.read.parquet(lake)
-    assert got.count() == len(DOCS)
-    assert got.select("doc_id").distinct().count() == len(DOCS)
-    assert (
-        got.filter(~F.col("text_md5").eqNullSafe(row_digest(["text"]))).count()
-        == 0
-    )
-    # staging area is gone; a further run is a clean no-op
-    assert not Path(lake + "_backfill_staging").exists()
-    assert backfill_digest_column(
-        spark, lake, "text_md5", row_digest(["text"])
-    ) == {"files": 0, "rows": 0}
-
-
 def test_image_lake_backfill_null_payload_sentinel(spark, tmp_path):
     """Image-twin wrapper: legacy rows digested NULL payloads as
     md5(b'') — indistinguishable from a genuinely empty payload. The
@@ -190,8 +160,8 @@ def test_backfill_discards_precommit_staging_leftovers(spark, tmp_path):
     lake = str(tmp_path / "lake")
     _legacy_doc_lake(spark, lake)
     backfill_doc_dedup_lake(spark, lake)  # lake now clean
-    staging = lake + "_backfill_staging"
-    Path(staging).mkdir()
+    staging = journal.staging(lake)
+    Path(staging).mkdir(parents=True)
     (Path(staging) / "part-stale.parquet").write_bytes(b"junk")
     assert backfill_doc_dedup_lake(spark, lake) == {"files": 0, "rows": 0}
     assert not Path(staging).exists()

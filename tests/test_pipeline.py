@@ -456,21 +456,44 @@ def test_compat_rename_spares_untouched_multifile_partitions(
     assert out.filter(out.id == "s0").select("status").collect()[0][0] == "x"
 
 
-def test_compat_rename_refuses_multifile_touched_partition(spark, tmp_path):
-    """A touched partition holding >1 part file means the single-task
-    invariant broke — the rename must raise, never delete data."""
+def test_compat_rename_refuses_multifile_touched_partition(
+    spark, tmp_path, lake
+):
+    """A touched partition written as more than one part file means
+    the single-task invariant broke: the compat write must raise
+    before its commit point, leaving the lake untouched."""
     from data_ingestor_gluejob_script_spark.pipeline import (
-        _rename_to_single_objects,
+        write_partitioned_upsert,
     )
 
-    root = str(tmp_path / "t")
-    d = f"{root}/company=Locaweb/tbl_year=2024/tbl_month=1"
-    os.makedirs(d)
-    for i in range(2):
-        with open(f"{d}/part-0000{i}.parquet", "w") as f:
-            f.write("x")
-    with pytest.raises(IOError, match="refusing"):
-        _rename_to_single_objects(spark, root, "tbl", "Locaweb", [(2024, 1)])
+    spec = CATALOG["retail_subscriptions"]
+    write_partitioned_upsert(
+        spark, _df_60jan_40feb(spark, spec), spec, lake,
+        single_object_compat=True,
+    )
+    root = f"{lake}/raw/locaweb/{spec.name}"
+
+    def files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(root)
+            if "_journal" not in d
+            for f in fs
+        )
+
+    before = files()
+    # A session-wide file roll splits each partition's one task output.
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    try:
+        with pytest.raises(IOError, match="refusing"):
+            write_partitioned_upsert(
+                spark, _df_60jan_40feb(spark, spec), spec, lake,
+                single_object_compat=True,
+            )
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert files() == before
+    assert spark.read.parquet(root).count() == 100
 
 
 def test_compaction_via_hadoop_scheme_path(spark, tmp_path, lake):
@@ -1202,8 +1225,11 @@ def test_apply_cdc_batch_double_delete_matches_single(
 
 def test_fused_cdc_batch_job_count(spark, tmp_path, count_jobs):
     """One warm fused CDC batch — an update, a delete in the updated
-    partition and one that empties another — launches 21 Spark jobs.
-    The delete keys and the persisted upserts both come out of the
+    partition and one that empties another — launches 16 Spark jobs.
+    The emptied partition comes from the write's Observation, not from
+    a collect of the partitions that keep rows (3 jobs), and the
+    last-change window is pinned once, not evaluated by each of its
+    four readers (2 more). The delete keys and the persisted upserts both come out of the
     last-change window hash-partitioned on the id, so a distinct over
     the keys or the merge's dedup window would add no exchange and no
     job: dropping them saves operators, not jobs."""
@@ -1216,7 +1242,7 @@ def test_fused_cdc_batch_job_count(spark, tmp_path, count_jobs):
         lambda: apply_cdc_batch(spark, cdf, SUBS, lake)
     )
     assert counts == (1, 2)
-    assert jobs == 21
+    assert jobs == 16
 
 
 def test_upsert_is_company_scoped_on_multi_company_lake(
