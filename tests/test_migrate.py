@@ -2,7 +2,7 @@
 written under the pre-sentinel digest conventions is upgraded in place
 — only stale files rewritten, untouched files byte-identical, replays
 against the upgraded lake append nothing, and the tool is idempotent.
-Its crash windows are in tests/test_journal.py's fault matrix."""
+Its crash windows are also in tests/test_journal.py's fault matrix."""
 
 from __future__ import annotations
 
@@ -114,6 +114,48 @@ def test_doc_backfill_makes_replay_append_nothing(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert spark.read.parquet(lake).count() == len(DOCS)
+
+
+@pytest.mark.parametrize("crash_after", ["stage", "delete"])
+def test_backfill_crash_windows_resume(
+    spark, tmp_path, journal_crash, crash_after
+):
+    """Crashes just after the commit point (the corrected file staged,
+    the manifest published) and at the stale file's delete: the rerun
+    resumes the journal's commit, and the lake ends complete and
+    convention-correct with no duplicate rows."""
+    probe = str(tmp_path / "probe")
+    _legacy_doc_lake(spark, probe)
+    calls = journal_crash(None)
+    backfill_digest_column(spark, probe, "text_md5", row_digest(["text"]))
+    committed = calls.index("rename") + 1  # the manifest's rename
+    victim_delete = calls.index("delete", calls.index("rename", committed) + 1)
+    crash_at = {"stage": committed, "delete": victim_delete}[crash_after]
+
+    lake = str(tmp_path / "lake")
+    _legacy_doc_lake(spark, lake)
+    journal_crash(crash_at)
+    with pytest.raises(RuntimeError, match="crash at call"):
+        backfill_digest_column(
+            spark, lake, "text_md5", row_digest(["text"])
+        )
+    journal_crash(None)
+    res = backfill_digest_column(
+        spark, lake, "text_md5", row_digest(["text"])
+    )
+    assert res["resumed"] is True and res["rows"] == 1
+    got = spark.read.parquet(lake)
+    assert got.count() == len(DOCS)
+    assert got.select("doc_id").distinct().count() == len(DOCS)
+    assert (
+        got.filter(~F.col("text_md5").eqNullSafe(row_digest(["text"]))).count()
+        == 0
+    )
+    # the journal is gone; a further run is a clean no-op
+    assert not Path(journal.staging(lake)).parent.exists()
+    assert backfill_digest_column(
+        spark, lake, "text_md5", row_digest(["text"])
+    ) == {"files": 0, "rows": 0}
 
 
 def test_image_lake_backfill_null_payload_sentinel(spark, tmp_path):
