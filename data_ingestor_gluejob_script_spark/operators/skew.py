@@ -1,66 +1,10 @@
-"""Skew-hardened variants of the keyed operators.
-
-The single-phase upsert window (operators/upsert.py) partitions by the
-id column: one hot key = one reducer sorting that key's entire row set.
-AQE's skew-join splitting does not apply to window functions, so a
-pathological key (the reference's data has none, a 100 TB lake will)
-needs explicit salting: pick a per-(key, salt) winner first — bounding
-any reducer's group to ~|key| / n_salts rows — then reduce the ≤
-n_salts survivors per key to the global winner.
-
-Both phases use the SAME ordering spec as the unsalted operator, so the
-winner is identical (the global best row survives its salt bucket by
-transitivity of the total order). Property-tested for equivalence in
-tests/test_skew.py.
-"""
+"""Key-skew diagnostics (the ``x_skew_report`` extra) and their DuckDB
+oracle, checked in tests/test_skew.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .upsert import PRECEDENCE_COL
-
-DEFAULT_SALTS = 16
-_SALT_COL = "_salt"
-
-
-def _keep_first(df: DataFrame, part_cols: list[str], order_cols) -> DataFrame:
-    w = Window.partitionBy(*part_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def salted_upsert_dedup(
-    incoming: DataFrame,
-    existing: DataFrame | None,
-    id_cols: list[str] | str,
-    n_salts: int = DEFAULT_SALTS,
-) -> DataFrame:
-    """upsert_dedup with a two-phase salted winner selection; same
-    semantics (incoming beats existing; deterministic tie-break over
-    value columns), hot-key-proof reducers."""
-    if isinstance(id_cols, str):
-        id_cols = [id_cols]
-    tagged = incoming.withColumn(PRECEDENCE_COL, F.lit(0))
-    if existing is not None:
-        tagged = tagged.unionByName(existing.withColumn(PRECEDENCE_COL, F.lit(1)))
-    value_cols = [c for c in incoming.columns if c not in id_cols]
-    order = [F.col(PRECEDENCE_COL)] + [
-        F.col(c).asc_nulls_last() for c in value_cols
-    ]
-    # Random salt is fine: any row distribution works because phase 2
-    # re-reduces; determinism of the WINNER comes from the ordering.
-    salted = tagged.withColumn(
-        _SALT_COL, (F.rand(seed=0) * n_salts).cast("int")
-    )
-    per_bucket = _keep_first(salted, [*id_cols, _SALT_COL], order)
-    return _keep_first(per_bucket, id_cols, order).drop(
-        _SALT_COL, PRECEDENCE_COL
-    )
 
 
 def skew_report(df: DataFrame, key: str, k: int = 10) -> DataFrame:

@@ -9,18 +9,14 @@ a nondeterministic winner, so precedence must be explicit: tag each
 side with a precedence rank, take ``row_number() == 1`` per key
 ordered by that rank.
 
-Scale notes (100 TB): the window shuffles once on the id column —
-same cost as any keyed dedup. Hot keys are handled by AQE skew
-splitting; for pathological skew pre-salt the window key. The
-partition-scoped variant in pipeline.py only touches (year,month)
-partitions present in the incoming batch, so a daily increment never
-rewrites the whole lake.
+Scale notes (100 TB): ``upsert_dedup``'s window shuffles the union of
+both sides once on the id column. The lake writer (pipeline.py) runs
+``merge_upsert`` instead, over only the (year, month) partitions
+present in the incoming batch; on a daily increment its lake side is
+the streamed side of a broadcast anti join and never shuffles.
 """
 
 from __future__ import annotations
-
-from functools import reduce
-from operator import and_
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -65,123 +61,64 @@ def upsert_dedup(
     )
 
 
-def _dedup_within(df: DataFrame, id_cols: list[str], value_cols: list[str]) -> DataFrame:
-    """One row per key within a single side, using the SAME stable
-    ordering upsert_dedup applies inside a precedence class — so the
-    two formulations pick identical winners."""
-    w = Window.partitionBy(*id_cols).orderBy(
-        *[F.col(c).asc_nulls_last() for c in value_cols]
-    )
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def merge_upsert(
     incoming: DataFrame,
-    existing: DataFrame,
-    id_cols: list[str] | str,
+    existing: DataFrame | None,
+    id_col: str,
     *,
-    dedup_within: bool = True,
-    existing_unique: bool = False,
-    broadcast_incoming: bool = True,
-    keys_nullable: bool = True,
+    dedup_within: bool,
+    broadcast_incoming: bool,
 ) -> DataFrame:
-    """Join-formulated upsert, row-for-row equal to ``upsert_dedup``:
-    ``dedup(incoming)  UNION  (dedup(existing) ANTI JOIN incoming-keys)``.
+    """Join-formulated upsert: ``dedup(incoming) UNION (existing ANTI
+    JOIN incoming-ids)``, row-for-row equal to ``upsert_dedup`` when
+    ``existing`` keeps the lake's contract: one row per id and no NULL
+    id. The lake writer keeps that contract: its merge writes one row
+    per id, and its NULL-id guard (``pipeline._evaluated_batch``) runs
+    on every write. So the existing side is never windowed and the
+    anti join uses plain equality. ``incoming`` may carry duplicate
+    and NULL ids.
 
-    Same semantics (incoming wins per key, ties within a side broken by
-    the same stable value ordering, null keys collide like the window's
-    null-grouping via null-safe join keys) but a 100-TB-shaped plan:
-    ``upsert_dedup``'s window must hash-shuffle the UNION of both sides
-    — i.e. the whole lake — every run, because Spark's UnionExec
-    reports unknown partitioning even when both children are bucketed.
-    Here the lake side is only ever the null-stream of an anti join:
+    ``upsert_dedup``'s window shuffles the union of both sides. Here,
+    on the broadcast arm, the existing side never shuffles: it is only
+    the streamed side of the anti join.
 
-    - ``broadcast_incoming=True`` (a daily increment): the lake NEVER
-      shuffles — scan → BroadcastHashJoin(LeftAnti) → union, a map-only
-      plan on the big side regardless of layout.
-    - ``broadcast_incoming=False`` (a backfill too big to broadcast):
-      sort-merge anti join; with the lake bucketed+sorted on the id
-      (pipeline.write_bucketed) its side has NO Exchange and NO Sort —
-      only the incoming batch shuffles.
-    - ``dedup_within=True`` adds a per-side window; over a bucketed
-      lake scan that window is Exchange-free (the scan's hash
-      partitioning satisfies the window's clustering). Caveat pinned
-      by tests/test_merge_upsert.py: the downstream SMJ then aligns
-      partition COUNTS, so unless the bucket count equals the other
-      side's shuffle partition count (AQE's initialPartitionNum here)
-      an alignment Exchange of the lake reappears above the window.
-      The contract plan is ``dedup_within=False`` — the lake written
-      by this very operator is always unique per key — where the
-      windows vanish and EnsureRequirements shuffles only the incoming
-      side, conforming it to the lake's bucket count.
-      ``existing_unique=True`` is the asymmetric middle: the incoming
-      batch still gets its window (a re-extraction can carry duplicate
-      ids) but the lake side skips its own — the scoped lake read of
-      pipeline.write_partitioned_upsert is unique per key by that
-      writer's own contract. The writer also drives ``dedup_within``
-      from its input: where the batch's evaluation pass proved the ids
-      unique (a daily increment almost always is) it passes False and
-      the broadcast arm runs no shuffle at all; a batch that does
-      carry a duplicate id keeps the window.
-    - The anti join's key side is always ``incoming``'s id columns,
-      never the windowed frame: the key set is the same, so the window
-      (when it runs) shuffles once, and the sort-merge arm's key side
-      shuffles only the ids.
-    - ``keys_nullable=False`` is the PK contract: the anti join uses
-      plain equality instead of null-safe equality. This matters for
-      the bucketed arm specifically — Spark partitions a null-safe
-      join key as ``(coalesce(k), isnull(k))``, which a table bucketed
-      on ``k`` can never satisfy, so with nullable keys the lake's SMJ
-      Exchange survives bucketing. A lake keyed by a real primary key
-      (the only kind this engine writes) can assert non-null and get
-      the Exchange-free layout plan; with actual null keys under this
-      flag, existing-side null-key rows would always survive the anti
-      join (SQL equality semantics) instead of colliding — hence the
-      safe default.
+    - ``dedup_within``: window ``incoming`` to one row per id, with
+      ``upsert_dedup``'s tie-break inside a side (value columns
+      ascending, NULLs last). Pass False only for a batch whose ids are
+      known unique (the writer learns it from its batch evaluation);
+      the broadcast arm then runs no shuffle at all.
+    - ``broadcast_incoming``: True broadcasts the batch's ids (a daily
+      increment: scan → BroadcastHashJoin(LeftAnti) → union); False
+      forces a sort-merge anti join (a backfill too big to broadcast).
+      Both are hints, so the plan follows the flag, not Spark's size
+      estimate.
 
-    Measured at sf10/sf100 (SCALE.md "Round-13: join-formulated
-    upsert + bucketed lake"); equality to upsert_dedup pinned by
-    differential tests including duplicate and null keys on both
-    sides.
+    The anti join's keys come from ``incoming`` itself, not from the
+    windowed frame: a left anti join ignores duplicate build rows and
+    the key set is the same, so the window, when it runs, shuffles
+    once (an inferred ``isnotnull(id)`` on a windowed keys side stops
+    Spark reusing its exchange), and on the sort-merge arm the keys
+    side shuffles only the ids.
+
+    ``existing=None`` (no lake yet) returns the incoming side alone,
+    windowed iff ``dedup_within``.
     """
-    if isinstance(id_cols, str):
-        id_cols = [id_cols]
-    value_cols = [c for c in incoming.columns if c not in id_cols]
-    inc = (
-        _dedup_within(incoming, id_cols, value_cols)
-        if dedup_within
-        else incoming
-    )
-    ex = (
-        _dedup_within(existing, id_cols, value_cols)
-        if dedup_within and not existing_unique
-        else existing
-    )
-    # The keys come from the batch itself, not from the windowed
-    # ``inc``: a left anti join ignores duplicate build rows and the
-    # key set is the same (the window keeps one row per key, the NULL
-    # key included), so the keys side never re-runs the window's
-    # shuffle — an inferred isnotnull(id) on this side would stop
-    # Spark reusing ``inc``'s exchange — and under sort-merge only the
-    # id column shuffles.
-    keys = incoming.select(*[F.col(c).alias(f"_mk_{c}") for c in id_cols])
-    # The flag is a size declaration, so make the plan deterministic
-    # both ways: True forces the broadcast, False forbids it (without
-    # the merge hint Spark would auto-broadcast a small keys side and
-    # the "too big to broadcast" arm could never be exercised/measured).
+    value_cols = [c for c in incoming.columns if c != id_col]
+    inc = incoming
+    if dedup_within:
+        w = Window.partitionBy(id_col).orderBy(
+            *[F.col(c).asc_nulls_last() for c in value_cols]
+        )
+        inc = (
+            incoming.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+    if existing is None:
+        return inc
+    keys = incoming.select(F.col(id_col).alias(f"_mk_{id_col}"))
     keys = F.broadcast(keys) if broadcast_incoming else keys.hint("merge")
-    cond = reduce(
-        and_,
-        [
-            ex[c].eqNullSafe(keys[f"_mk_{c}"])
-            if keys_nullable
-            else ex[c] == keys[f"_mk_{c}"]
-            for c in id_cols
-        ],
+    survivors = existing.join(
+        keys, existing[id_col] == keys[f"_mk_{id_col}"], "left_anti"
     )
-    survivors = ex.join(keys, cond, "left_anti")
     return inc.unionByName(survivors).select(*incoming.columns)

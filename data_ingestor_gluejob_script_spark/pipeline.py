@@ -17,27 +17,29 @@ Spark-first re-expression:
 - The read-merge-overwrite of one parquet object per partition
   (gluejob.py:190-205) becomes: prune the existing lake to the
   partitions present in the batch (partition-filter pushdown — Spark
-  never opens untouched directories), union with explicit precedence,
-  ``row_number()`` winner per id (deterministic where the reference's
-  ``keep='first'`` is order-dependent), written to staging; the
-  lake-commit journal (``journal.py``) then replaces exactly the
-  partition directories the write produced, crash-safely, as the
-  reference's one ``put_object`` per partition is atomic.
+  never opens untouched directories), keep the batch's rows (one per
+  id, deterministic where the reference's ``keep='first'`` is
+  order-dependent) and the lake rows whose id the batch lacks (an
+  anti join), written to staging; the lake-commit journal
+  (``journal.py``) then replaces exactly the partition directories
+  the write produced, crash-safely, as the reference's one
+  ``put_object`` per partition is atomic.
 - The one-file-per-partition constraint is dropped (it caps write
   parallelism and forces 100 TB partitions through one task); the
   directory contract is preserved, which is what downstream readers
   depend on.
 
-Scale notes (100 TB): the only shuffles are the upsert window on the
-id column and the write's partition split; both are keyed, AQE-sized,
-and skew-split. The touched-partition set is the one driver-side
-result — a list of (year, month) pairs, bounded by the calendar, not
-the data. The lake writer gets it, with the batch's row count (the
-empty-batch skip) and NULL-id count (the PK guard), from ONE
-evaluation of the batch (``_evaluated_batch``): a ``noop`` write
-carrying an Observation. The partitions the merge wrote come from an
-Observation on the write itself, and the journal publishes each one
-with about three filesystem calls — no listing, no Spark job.
+Scale notes (100 TB): on a daily increment the lake side of the merge
+never shuffles; the one shuffle left is the batch's dedup window on
+the id column, skipped when its ids are unique. The touched-partition
+set is the one driver-side result — a list of (year, month) pairs,
+bounded by the calendar, not the data. The lake writer gets it, with
+the batch's row count (the empty-batch skip) and NULL-id count (the PK
+guard), from ONE evaluation of the batch (``_evaluated_batch``): a
+``noop`` write carrying an Observation. The partitions the merge wrote
+come from an Observation on the write itself, and the journal
+publishes each one with about three filesystem calls — no listing, no
+Spark job.
 
 - daily increments (``broadcast_batch=True``): that write also fills
   a persisted copy of the batch, and the merge reads the cache, so the
@@ -65,7 +67,7 @@ from . import journal
 from .operators.normalize import normalize_booleans
 from .operators.relational import semi_join, watermark_filter
 from .operators.temporal import derive_partitions, format_ts_micro, parse_ts
-from .operators.upsert import merge_upsert, upsert_dedup
+from .operators.upsert import merge_upsert
 from .registry import CATALOG, TableSpec, tables_list
 from .sources.files import _hadoop_path, read_csv_table, read_parquet_table
 from .watermarks import WATERMARK_FORMAT, WatermarkStore
@@ -120,7 +122,7 @@ def _evaluated_batch(
     writer once per micro-batch.
 
     The PK guard matters because the writer runs the merge's anti
-    join with plain-equality keys (``keys_nullable=False``), which is
+    join with plain-equality keys (merge_upsert's contract), which is
     only sound because no row with a NULL id ever enters the lake —
     enforced HERE, on every write including the initial load, so the
     invariant holds for the lake's whole life.
@@ -264,7 +266,6 @@ def write_partitioned_upsert(
     spec: TableSpec,
     lake_root: str,
     company: str = "Locaweb",
-    max_records_per_file: int | None = None,
     single_object_compat: bool = False,
     delete_keys: DataFrame | None = None,
     delete_touched: list[tuple] | None = None,
@@ -272,29 +273,31 @@ def write_partitioned_upsert(
 ) -> int:
     """K1: merge one table batch into its lake partitions.
 
-    The merge itself is ``merge_upsert`` (r13): the scoped lake read
-    never shuffles — it is the map-side stream of an anti join against
-    the batch's broadcast key set — where the previous window-over-
-    union form re-shuffled every touched partition's rows on each
-    daily batch. ``broadcast_batch`` declares the batch
+    The merge itself is ``merge_upsert``, also on an empty lake. On a
+    daily increment the scoped lake read never shuffles — it is the
+    map-side stream of an anti join against the batch's broadcast key
+    set — where a window over the union would re-shuffle every
+    touched partition's rows. ``broadcast_batch`` declares the batch
     driver-holdable (a daily increment); pass False for a
     backfill-sized batch (initial_load does) and the merge takes the
-    sort-merge arm — only the batch shuffles either way.
+    sort-merge arm. Files roll over at Spark's session-wide
+    ``spark.sql.files.maxRecordsPerFile``.
 
-    Uniqueness invariant (``existing_unique=True``): one row per id
-    PER PARTITION, which is one row per id lake-wide because the
-    partition key derives from the created-at column — immutable at
-    the source (gluejob.py:174: DT_CreatedAt/created_at, never the
-    updated_at that incremental pulls filter on), so an id can never
-    legitimately move partitions. A source that DID mutate created_at
-    would strand a stale copy in the old partition under BOTH merge
-    forms (the untouched partition is never read); the old window
-    form only appeared to heal it in the lucky case both partitions
-    were touched — and then picked an arbitrary column-order winner,
-    not the newest row. The reference merges each partition file
-    independently (gluejob.py:190-205) and never heals
-    cross-partition copies either; this writer now matches it
-    exactly.
+    Uniqueness invariant (merge_upsert's existing-side contract, with
+    the NULL-id guard below): one row per id PER PARTITION, which is
+    one row per id lake-wide because the partition key derives from
+    the created-at column — immutable at the source (gluejob.py:174:
+    DT_CreatedAt/created_at, never the updated_at that incremental
+    pulls filter on), so an id can never legitimately move partitions.
+    A source that DID mutate created_at would strand a stale copy in
+    the old partition under BOTH merge forms (the untouched partition
+    is never read); the old window form only appeared to heal it in
+    the lucky case both partitions were touched — and then picked an
+    arbitrary column-order winner, not the newest row. The reference
+    merges each partition file independently (gluejob.py:190-205) and
+    never heals cross-partition copies either; this writer now matches
+    it exactly.
+
 
     Batch evaluation: the empty-batch skip, the NULL-id guard and the
     touched (year, month) set come from one pass over the batch
@@ -380,33 +383,18 @@ def write_partitioned_upsert(
                 F.broadcast(key), spec.id_col, "left_anti"
             )
 
-        # With unique ids the within-batch dedup window is the
+        # O6+O7. With unique ids the within-batch dedup window is the
         # identity, so it is skipped: a daily increment then merges
-        # without a shuffle.
-        if existing is None:
-            merged = (
-                prepared
-                if unique_ids
-                else upsert_dedup(prepared, None, spec.id_col)  # O6+O7
-            )
-        else:
-            merged = merge_upsert(  # O6+O7, join-formulated (r13)
-                prepared,
-                existing,
-                spec.id_col,
-                dedup_within=not unique_ids,
-                existing_unique=True,
-                broadcast_incoming=broadcast_batch,
-                # PK contract: ids are guarded non-null on every write
-                # (see _evaluated_batch), so the anti join may use plain
-                # equality. The null-safe form would partition on
-                # (coalesce(id), isnull(id)) — a shape no id-bucketed
-                # lake can satisfy, silently re-introducing the
-                # lake-side Exchange on the sort-merge/backfill arm (the
-                # trap pinned in operators/upsert.py and
-                # tests/test_merge_upsert.py).
-                keys_nullable=False,
-            )
+        # without a shuffle. The scoped lake read meets merge_upsert's
+        # existing-side contract (one row per id, no NULL id) because
+        # every write to it passed _evaluated_batch's NULL-id guard.
+        merged = merge_upsert(
+            prepared,
+            existing,
+            spec.id_col,
+            dedup_within=not unique_ids,
+            broadcast_incoming=broadcast_batch,
+        )
         # Row count and written partitions via an Observation on the
         # write itself: a separate action would execute the full merge
         # plan (the incoming-side window dedup, if it runs +
@@ -423,16 +411,7 @@ def write_partitioned_upsert(
             # year, month) combination lands in exactly one task →
             # exactly one file per partition directory, renamed below.
             out = out.repartition("company", ycol, mcol)
-        writer = out.write
-        if max_records_per_file and not single_object_compat:
-            # The reference writes ONE object per partition (gluejob.py:
-            # 187,201-203) — a single-task bottleneck at 100 TB. We keep
-            # the directory contract and bound file size instead: Spark
-            # rolls to a new file within the partition every N records.
-            writer = writer.option(
-                "maxRecordsPerFile", str(max_records_per_file)
-            )
-        writer.mode("overwrite").partitionBy("company", ycol, mcol).parquet(
+        out.write.mode("overwrite").partitionBy("company", ycol, mcol).parquet(
             journal.staging(root)
         )
         n = int(obs.get["n"])
@@ -555,32 +534,6 @@ def lake_partition_stats(spark: SparkSession, table_root: str) -> DataFrame:
     df = spark.read.option("mergeSchema", "true").parquet(table_root)
     part_cols = _partition_cols(spark, df, table_root)
     return df.groupBy(*part_cols).count().withColumnRenamed("count", "n_rows")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a DataFrame as a bucketed (and optionally sorted)
-    parquet table in the session catalog.
-
-    Bucketing pre-shuffles ONCE at write time: two tables bucketed on
-    their join key co-locate, so every subsequent join between them
-    runs with NO exchange (and with sortBy, no sort either) — the
-    amortization that matters for a fact table joined daily at 100 TB.
-    Verified by plan assertion in tests/test_bucketing.py.
-    """
-    writer = (
-        df.write.format("parquet")
-        .mode("overwrite")
-        .bucketBy(num_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
 
 
 class LocalFileSource:

@@ -131,10 +131,15 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The WM_UPSERT slice is ~62% of orders — a backfill (the backfill
     # arms of SCALE.md "Round-13: join-formulated upsert + bucketed
     # lake") — so the registered-shape twin must take the sort-merge
-    # arm; the default broadcast would force-collect ~93M keys to the
-    # driver at sf100 (r13 review finding).
+    # arm; a broadcast would force-collect ~93M keys to the driver at
+    # sf100. orders is unique and non-null on o_orderkey,
+    # merge_upsert's contract for the existing side.
     return merge_upsert(
-        incoming, orders, "o_orderkey", broadcast_incoming=False
+        incoming,
+        orders,
+        "o_orderkey",
+        dedup_within=True,
+        broadcast_incoming=False,
     )
 
 

@@ -95,7 +95,6 @@ matches anything within distance max_dist of it.
 from __future__ import annotations
 
 import logging
-import os
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -445,27 +444,6 @@ def _verified_value_pairs(
     return _verify_string_pairs(pairs, max_dist)
 
 
-def _resolve_passes(passes: int | None) -> int:
-    """None -> $SPARK_GRAFT_FUZZY_PASSES (default 1). The env seam
-    lets the scale smoke run the sf100 sharded form without touching
-    the registered query's call site; any B yields identical rows.
-    Env activation is invisible at call sites on shared drivers, so
-    it logs loudly (once per call) when it actually changes the
-    plan shape."""
-    if passes is None:
-        env_b = max(1, int(os.environ.get("SPARK_GRAFT_FUZZY_PASSES", "1")))
-        if env_b > 1:
-            logging.getLogger(__name__).warning(
-                "fuzzy join: SPARK_GRAFT_FUZZY_PASSES=%d activates "
-                "sequential sharded candidate generation (B passes, "
-                "~1/B peak shuffle scratch, per-pass checkpoint + "
-                "plan-scoped shuffle cleanup) for this call",
-                env_b,
-            )
-        return env_b
-    return max(1, passes)
-
-
 def _fuzzy_matches(
     tagged: DataFrame,
     max_dist: int,
@@ -481,7 +459,7 @@ def _fuzzy_matches(
     vp = _value_pairs(
         tagged.select("s").distinct(),
         max_dist,
-        passes=_resolve_passes(passes),
+        passes=max(1, passes or 1),
     )
     # Directed copies: the left/smaller-id member may hold either
     # value of the unordered pair. One explode over a single vp
@@ -593,10 +571,9 @@ def fuzzy_join(
     input rows would multiply output pairs, not dedup them.
     ``passes`` shards candidate generation into B sequential
     hash-prefix passes (identical result, ~1/B peak shuffle scratch
-    — the 100-TB / tight-scratch knob); None reads
-    $SPARK_GRAFT_FUZZY_PASSES, default 1. passes > 1 performs
-    explicit shuffle-file cleanup between passes; cleanup is scoped
-    to each pass's own executed plan (_plan_shuffle_ids), so
+    — the 100-TB / tight-scratch knob); None means 1. passes > 1
+    performs explicit shuffle-file cleanup between passes; cleanup is
+    scoped to each pass's own executed plan (_plan_shuffle_ids), so
     concurrent jobs on the same SparkSession are safe."""
     lt = left.select(
         F.col(id_col).alias("id"), F.lit(0).alias("side"),

@@ -84,10 +84,9 @@ def get_spark(
         # normalization lives in queries/_util.read_events.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        # Managed-table scratch (write_bucketed's catalog tables, e.g.
-        # the bucketed 3-hop layout of SCALE.md "Round-12: the bucketed
-        # lake layout") belongs in temp space, not a ./spark-warehouse
-        # dir inside whatever cwd launched the job. Per-user suffix:
+        # Managed-table scratch (any saveAsTable in the session)
+        # belongs in temp space, not a ./spark-warehouse dir inside
+        # whatever cwd launched the job. Per-user suffix:
         # on a multi-user host a fixed shared path is owned by
         # whoever ran first, and other users' managed-table writes
         # (fixed table names) fail or collide.

@@ -235,19 +235,6 @@ def test_vid_collisions_recovered(spark, monkeypatch, passes):
     assert got == brute_self(rows, 2)
 
 
-def test_passes_env_seam(spark, monkeypatch):
-    """passes=None reads $SPARK_GRAFT_FUZZY_PASSES — the scale-smoke
-    seam — and still matches brute force."""
-    monkeypatch.setenv("SPARK_GRAFT_FUZZY_PASSES", "4")
-    rows = _random_corpus(80, seed=11)
-    df = spark.createDataFrame(rows, "id int, name string")
-    got = sorted(
-        (r.id_a, r.id_b, r.dist)
-        for r in fuzzy_self_join(df, "id", "name", max_dist=1).collect()
-    )
-    assert got == brute_self(rows, 1)
-
-
 def test_pass_shuffle_cleanup_mechanism(spark):
     """The sequential-pass design DEPENDS on explicit shuffle-file
     deletion (completed passes' files measurably survive GC nudges on

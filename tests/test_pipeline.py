@@ -269,33 +269,18 @@ def test_unknown_job_mode_is_noop():
     assert "checkout_orders" not in tables_list("allTables")
 
 
-def test_max_records_per_file_bounds_file_size(spark, tmp_path, lake):
-    import glob
-
+def _fragmented_upsert(spark, df, spec, lake):
+    """Upsert with Spark's file roll at 10 records, so each partition
+    is written as several files."""
     from data_ingestor_gluejob_script_spark.pipeline import (
         write_partitioned_upsert,
     )
 
-    spec = CATALOG["retail_subscriptions"]
-    rows = [
-        _sub(f"s{i}", "2024-01-10 10:00:00", "2024-01-10 10:00:00")
-        for i in range(100)
-    ]
-    df = spark.createDataFrame(
-        [[r[c] for c in spec.columns] for r in rows], list(spec.columns)
-    )
-    n = write_partitioned_upsert(
-        spark, df, spec, lake, max_records_per_file=10
-    )
-    assert n == 100
-    files = glob.glob(
-        f"{lake}/raw/locaweb/{spec.name}/company=Locaweb/*/*/*.parquet"
-    )
-    assert len(files) >= 10  # 100 rows / 10 per file
-    total = sum(
-        spark.read.parquet(f).count() for f in files
-    )
-    assert total == 100
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "10")
+    try:
+        return write_partitioned_upsert(spark, df, spec, lake)
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
 
 
 def test_compaction_and_stats(spark, tmp_path, lake):
@@ -304,7 +289,6 @@ def test_compaction_and_stats(spark, tmp_path, lake):
     from data_ingestor_gluejob_script_spark.pipeline import (
         compact_partitions,
         lake_partition_stats,
-        write_partitioned_upsert,
     )
 
     spec = CATALOG["retail_subscriptions"]
@@ -318,7 +302,7 @@ def test_compaction_and_stats(spark, tmp_path, lake):
     df = spark.createDataFrame(
         [[r[c] for c in spec.columns] for r in rows], list(spec.columns)
     )
-    write_partitioned_upsert(spark, df, spec, lake, max_records_per_file=10)
+    _fragmented_upsert(spark, df, spec, lake)
     root = f"{lake}/raw/locaweb/{spec.name}"
     frag = glob.glob(f"{root}/company=Locaweb/*/*/*.parquet")
     assert len(frag) >= 10  # fragmented on purpose
@@ -420,10 +404,7 @@ def test_compat_rename_spares_untouched_multifile_partitions(
     )
 
     spec = CATALOG["retail_subscriptions"]
-    write_partitioned_upsert(
-        spark, _df_60jan_40feb(spark, spec), spec, lake,
-        max_records_per_file=10,
-    )
+    _fragmented_upsert(spark, _df_60jan_40feb(spark, spec), spec, lake)
     root = f"{lake}/raw/locaweb/{spec.name}"
     feb_dir = (
         f"{root}/company=Locaweb/{spec.name}_year=2024/{spec.name}_month=2"
@@ -506,14 +487,10 @@ def test_compaction_via_hadoop_scheme_path(spark, tmp_path, lake):
     from data_ingestor_gluejob_script_spark.pipeline import (
         compact_partitions,
         lake_partition_stats,
-        write_partitioned_upsert,
     )
 
     spec = CATALOG["retail_subscriptions"]
-    write_partitioned_upsert(
-        spark, _df_60jan_40feb(spark, spec), spec, lake,
-        max_records_per_file=10,
-    )
+    _fragmented_upsert(spark, _df_60jan_40feb(spark, spec), spec, lake)
     root_local = f"{lake}/raw/locaweb/{spec.name}"
     root_uri = f"file:{root_local}"  # Python glob returns [] for this
 

@@ -302,6 +302,53 @@ def test_one_publish_protocol_in_package():
     assert FS_MUTATION_ALLOWLIST <= hits, "stale allowlist entries"
 
 
+# Every environment variable the package reads is an option of the
+# engine, so each "SPARK_GRAFT_…" string in the package needs an entry
+# here with the reason a caller cannot pass it as an argument instead.
+ENV_KNOB_ALLOWLIST = {
+    "SPARK_GRAFT_CPUS": "local[N] width of a session the process starts",
+    "SPARK_GRAFT_DRIVER_MEM": "driver heap, fixed before the JVM starts",
+    "SPARK_GRAFT_WAREHOUSE": "per-run managed-table scratch directory",
+    "SPARK_GRAFT_CODEGEN_CACHE": "session-wide codegen cache size",
+    "SPARK_GRAFT_PIN_LEVEL": "storage level of every corpus-sized pin",
+    "SPARK_GRAFT_LAKE_COMPACT_FILES": (
+        "streaming append-lake compaction threshold, read at import"
+    ),
+    "SPARK_GRAFT_LAKE_COMPACT_TARGET_BYTES": (
+        "streaming append-lake compacted file size, read at import"
+    ),
+    "SPARK_GRAFT_LAKE_COMPACT_INLINE": (
+        "moves streaming compaction out of the micro-batch"
+    ),
+    "SPARK_GRAFT_STREAM_BATCH_MAX_ROWS": (
+        "broadcast ceiling of a streaming micro-batch, read at import"
+    ),
+}
+
+
+def test_env_knobs_are_allowlisted():
+    """Package-wide guard: every "SPARK_GRAFT_…" string literal in the
+    package is on ENV_KNOB_ALLOWLIST, each entry has a reason, and
+    every entry is still read somewhere."""
+    import ast
+    import pathlib
+
+    pkg = (
+        pathlib.Path(__file__).resolve().parents[1]
+        / "data_ingestor_gluejob_script_spark"
+    )
+    hits = set()
+    for py in pkg.rglob("*.py"):
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if re.fullmatch(r"SPARK_GRAFT_[A-Z0-9_]+", node.value):
+                    hits.add(node.value)
+    unlisted = hits - ENV_KNOB_ALLOWLIST.keys()
+    assert not unlisted, f"environment knobs not on the allowlist: {unlisted}"
+    assert ENV_KNOB_ALLOWLIST.keys() <= hits, "stale allowlist entries"
+    assert all(ENV_KNOB_ALLOWLIST.values()), "allowlist entry without reason"
+
+
 def test_revenue_star_join_pushes_region_filter_and_broadcasts(plans):
     p = plans("q_revenue_by_nation")
     assert "EqualTo(r_name,ASIA)" in p  # region filter reaches the scan

@@ -1,57 +1,6 @@
-"""salted_upsert_dedup ≡ upsert_dedup — property-tested equivalence,
-including null values and hot keys."""
+"""skew_report against its DuckDB oracle."""
 
 from __future__ import annotations
-
-import random
-
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-from data_ingestor_gluejob_script_spark.operators.skew import salted_upsert_dedup
-from data_ingestor_gluejob_script_spark.operators.upsert import upsert_dedup
-import pytest
-
-_row = st.tuples(
-    st.integers(min_value=0, max_value=5),  # id: few keys → collisions
-    st.one_of(st.none(), st.text(alphabet="abc", max_size=3)),
-    st.integers(min_value=0, max_value=9).map(str),
-)
-
-
-def _collect(df):
-    return sorted((r[0], r[1], r[2]) for r in df.collect())
-
-
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(
-    inc=st.lists(_row, min_size=1, max_size=20),
-    ex=st.lists(_row, max_size=20),
-)
-@pytest.mark.slow
-def test_salted_equals_unsalted(spark, inc, ex):
-    schema = "id int, v1 string, v2 string"  # explicit: rows may be all-None
-    incoming = spark.createDataFrame(inc, schema)
-    existing = spark.createDataFrame(ex, schema) if ex else None
-    a = _collect(upsert_dedup(incoming, existing, "id"))
-    b = _collect(salted_upsert_dedup(incoming, existing, "id", n_salts=4))
-    assert a == b
-
-
-def test_hot_key_equivalence(spark):
-    # One key carrying 90% of rows — the scenario salting exists for.
-    random.seed(7)
-    rows = [(1, f"v{random.randint(0, 50)}", str(i % 10)) for i in range(900)]
-    rows += [(k, "x", "0") for k in range(2, 102)]
-    incoming = spark.createDataFrame(rows, ["id", "v1", "v2"]).repartition(8)
-    a = _collect(upsert_dedup(incoming, None, "id"))
-    b = _collect(salted_upsert_dedup(incoming, None, "id"))
-    assert a == b
-    assert len(a) == 101
 
 
 def test_skew_report_differential(spark):
